@@ -325,12 +325,14 @@ object Layout {
     require(smallBytes >= 1L, s"smallBytes must be >= 1, got $smallBytes")
     // outPath is cleared up front (below), so an in-place or nested
     // invocation would destroy the input before anything is read
-    // (ADVICE r21): reject outPath == inPath and either nesting
+    // (ADVICE r21): reject outPath == inPath and either nesting. The
+    // FULL qualified URI is compared — scheme, authority and path — so
+    // one path string on two filesystems is not mistaken for nesting
     locally {
       val conf = spark.sparkContext.hadoopConfiguration
       def qual(p: String) = {
         val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).makeQualified(hp).toUri.getPath
+        hp.getFileSystem(conf).makeQualified(hp).toUri.toString
           .stripSuffix("/")
       }
       val in = qual(inPath)
@@ -405,17 +407,20 @@ object Layout {
     }
     // carry the untouched files over verbatim (manifest-rename class),
     // preserving each file's path RELATIVE to the input root (ADVICE
-    // r20: flattening nested layouts risked destination collisions)
+    // r20: flattening nested layouts risked destination collisions);
+    // sources are resolved on the INPUT filesystem, which need not be
+    // the output's
     fs.mkdirs(out)
     val conf = spark.sparkContext.hadoopConfiguration
-    val rootUri = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(inPath)).toUri
+    val inRoot = new org.apache.hadoop.fs.Path(inPath)
+    val inFs = inRoot.getFileSystem(conf)
+    val rootUri = inFs.makeQualified(inRoot).toUri
     untouched.foreach { case (name, _, _) =>
       val src = new org.apache.hadoop.fs.Path(name)
-      val rel = rootUri.relativize(fs.makeQualified(src).toUri).getPath
+      val rel = rootUri.relativize(inFs.makeQualified(src).toUri).getPath
       val dst = new org.apache.hadoop.fs.Path(out, rel)
       fs.mkdirs(dst.getParent)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+      org.apache.hadoop.fs.FileUtil.copy(inFs, src, fs, dst, false, conf)
     }
     ZorderCompactReport(
       filesBefore = files.size.toLong,

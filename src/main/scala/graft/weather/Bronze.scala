@@ -4,16 +4,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Pivot
-
 /** Bronze stage: ingestion (SURVEY.md §2.1 S3-S5, §2.4 A5/A9).
   *
   * The reference stages raw CSV through driver-side pandas and pivots in
   * a single-threaded dict (Weather_API.py:76-91, 154, 194). Here both are
-  * distributed from the first touch: schema-applied CSV scan, distributed
-  * dropDuplicates, and a groupBy-pivot with the explicit 10-value
-  * vocabulary (no distinct-values pre-scan — at 100 TB that pre-scan is a
-  * full extra pass).
+  * distributed from the first touch: a schema-applied CSV scan, then ONE
+  * hash aggregate on (date, station) that pivots the explicit 10-value
+  * vocabulary and picks the coordinates in the same pass (no
+  * distinct-values pre-scan, no separate dedup — see [[pivotToWide]]).
   */
 object Bronze {
 
@@ -75,28 +73,27 @@ object Bronze {
     * coordinates (Weather_API.py:86-88; `min` as the deterministic
     * stand-in for first-seen — SURVEY.md §7.4 tie-break note).
     *
-    * Both aggregations group on (date, station), so the pivot and the
-    * coordinate agg share one shuffle partitioning and the join is
-    * co-partitioned — no third shuffle.
+    * One scan, one shuffle, one aggregate: each wide column is a
+    * conditional `max(when(datatype = dt, value))` and the coordinates
+    * are `min`s, all in a single groupBy on (date, station). `max` and
+    * `min` are idempotent, so exact duplicate records cannot change any
+    * cell and the reference's dedup needs no operator of its own.
+    * [[graft.operators.Pivot.longToWide]] is not used: Spark plans its
+    * pivot as two aggregates, and the coordinates would then need a
+    * second aggregate, a second scan of the source and a join.
     */
   def pivotToWide(raw: DataFrame): DataFrame = {
-    val deduped = raw
-      .dropDuplicates()
-      .filter(col("datatype").isin(WeatherSchemas.datatypeVocabulary: _*))
-      // null grouping keys would survive the pivot but vanish at the
-      // null-rejecting coords join below — drop them EXPLICITLY here so
-      // the loss is a documented filter, not a silent join artifact
-      .filter(col("date").isNotNull && col("station").isNotNull)
-    val wide = Pivot.longToWide(
-      deduped.select("date", "station", "datatype", "value"),
-      Seq("date", "station"), "datatype",
-      WeatherSchemas.datatypeVocabulary, "value")
-    val coords = deduped.groupBy("date", "station")
-      .agg(min("latitude").as("latitude"), min("longitude").as("longitude"))
-    val renamed = WeatherSchemas.columnsMapping.foldLeft(wide) {
-      case (df, (dt, name)) => df.withColumnRenamed(dt, name)
+    val cells = WeatherSchemas.columnsMapping.map { case (dt, name) =>
+      max(when(col("datatype") === dt, col("value"))).as(name)
     }
-    renamed.join(coords, Seq("date", "station"))
+    raw
+      .filter(col("datatype").isin(WeatherSchemas.datatypeVocabulary: _*))
+      // a record without a date or station is no observation: drop it
+      // EXPLICITLY so the loss is a documented filter, not a plan artifact
+      .filter(col("date").isNotNull && col("station").isNotNull)
+      .groupBy("date", "station")
+      .agg(min("latitude").as("latitude"),
+        (min("longitude").as("longitude") +: cells): _*)
       .select(WeatherSchemas.observationsWide.fieldNames.map(col): _*)
   }
 }

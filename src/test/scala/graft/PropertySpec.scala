@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.operators.{Dedup, Imputation}
+import graft.operators.{Dedup, Imputation, Pivot}
+import graft.weather.{Bronze, WeatherSchemas}
 
 /** Property tests (SURVEY.md §5 item 3), driven by raw scalacheck
   * generators with deterministic seeds (the scalatest bridge artifact is
@@ -224,5 +226,76 @@ class PropertySpec extends SparkSpec {
         df, Seq("k"), "dt", Seq("A", "B"), "v")
       assert(out.count() == rows.map(_._1).distinct.length)
     }
+  }
+
+  /** Reference for [[Bronze.pivotToWide]], composed from separate
+    * operators: exact dedup, Spark's pivot, a min-coordinate aggregate
+    * and the join of the two.
+    */
+  private def pivotToWideComposed(raw: DataFrame): DataFrame = {
+    val deduped = raw
+      .dropDuplicates()
+      .filter(col("datatype").isin(WeatherSchemas.datatypeVocabulary: _*))
+      .filter(col("date").isNotNull && col("station").isNotNull)
+    val wide = Pivot.longToWide(
+      deduped.select("date", "station", "datatype", "value"),
+      Seq("date", "station"), "datatype",
+      WeatherSchemas.datatypeVocabulary, "value")
+    val coords = deduped.groupBy("date", "station")
+      .agg(min("latitude").as("latitude"), min("longitude").as("longitude"))
+    val renamed = WeatherSchemas.columnsMapping.foldLeft(wide) {
+      case (df, (dt, name)) => df.withColumnRenamed(dt, name)
+    }
+    renamed.join(coords, Seq("date", "station"))
+      .select(WeatherSchemas.observationsWide.fieldNames.map(col): _*)
+  }
+
+  test("property: one-aggregate Bronze pivot ≡ dedup + pivot + coords join") {
+    // small key/code domains force several values per (date, station,
+    // datatype) cell and conflicting coordinates per (date, station);
+    // FOO is out of vocabulary; every column can be null; values and
+    // coordinates can be NaN; a random subset of rows is repeated
+    // verbatim so exact duplicates are always in play
+    def orNull[A](g: Gen[A]): Gen[Option[A]] =
+      Gen.frequency(1 -> Gen.const(None), 5 -> g.map(Some(_)))
+    val num = Gen.frequency(1 -> Gen.const(Double.NaN),
+      6 -> Gen.choose(-3, 3).map(_.toDouble / 2))
+    val row = for {
+      date <- orNull(Gen.oneOf("2024-01-01", "2024-01-02"))
+      station <- orNull(Gen.oneOf("S1", "S2"))
+      lat <- orNull(num)
+      lon <- orNull(num)
+      dt <- orNull(Gen.oneOf("PRCP", "TMAX", "WT01", "FOO"))
+      v <- orNull(num)
+    } yield (date, station, lat, lon, dt, v)
+    val g = for {
+      n <- Gen.choose(6, 24)
+      rs <- Gen.listOfN(n, row)
+      dups <- Gen.someOf(rs)
+      keys <- Gen.listOfN(rs.size + dups.size, Gen.choose(0, 1 << 20))
+    } yield (rs ++ dups).zip(keys).sortBy(_._2).map(_._1)
+    var multiValued, conflictingCoords = 0
+    samples(g, 12).foreach { rows =>
+      val raw = rows.toDF(WeatherSchemas.noaaLong.fieldNames: _*)
+      val got = Bronze.pivotToWide(raw)
+      val want = pivotToWideComposed(raw)
+      assert(got.schema == want.schema)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"rows=$rows\ngot=${got.collect().toSeq}\nwant=${want.collect().toSeq}")
+      val kept = rows.filter { case (d, s, _, _, dt, _) =>
+        d.isDefined && s.isDefined && dt.exists(_ != "FOO") }
+      def distinctNumbers(xs: Seq[Option[Double]]) =
+        xs.flatten.filterNot(_.isNaN).distinct.size
+      if (kept.groupBy(r => (r._1, r._2, r._5))
+          .exists(c => distinctNumbers(c._2.map(_._6)) > 1)) multiValued += 1
+      if (kept.groupBy(r => (r._1, r._2))
+          .exists(c => distinctNumbers(c._2.map(_._3)) > 1)) {
+        conflictingCoords += 1
+      }
+    }
+    // the generator really exercises cells holding several values and
+    // groups with conflicting coordinates
+    assert(multiValued > 0 && conflictingCoords > 0,
+      s"multiValued=$multiValued conflictingCoords=$conflictingCoords")
   }
 }

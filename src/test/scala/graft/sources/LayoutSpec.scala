@@ -520,4 +520,71 @@ class LayoutSpec extends SparkSpec {
     // the input survived every rejection
     assert(spark.read.parquet(dir).count() == 4L)
   }
+
+  test("zorderCompactN: the same path string on another filesystem is " +
+      "not nesting; the carry-over reads the input filesystem") {
+    val df = (0 until 8).flatMap(a => (0 until 8).map(b => (a, b, a ^ b)))
+      .toDF("a", "b", "c")
+    val dir = Files.createTempDirectory("graft_zc5").toString + "/t"
+    Layout.zorderWriteN(df, Seq("a", "b", "c"), dir, numFiles = 4)
+    val root = Files.createTempDirectory("graft_zc5_alt").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq(s"fs.${RebasedLocalFileSystem.Scheme}.impl",
+      s"fs.${RebasedLocalFileSystem.Scheme}.impl.disable.cache",
+      RebasedLocalFileSystem.RootKey)
+    conf.set(keys(0), classOf[RebasedLocalFileSystem].getName)
+    conf.set(keys(1), "true")
+    conf.set(keys(2), root)
+    try {
+      // identical path string, different scheme: a disjoint location
+      val out = s"${RebasedLocalFileSystem.Scheme}://$dir"
+      val rep = Layout.zorderCompactN(spark, dir, out, Seq("a", "b", "c"),
+        targetBytes = 1L << 20, smallBytes = 1L)
+      assert(rep.untouchedFiles == 4L && rep.rewrittenBytes == 0L)
+      // the carried files landed under the second filesystem's root,
+      // and the input is intact
+      assert(spark.read.parquet(out).count() == 64L)
+      assert(spark.read.parquet(s"file://$root$dir").count() == 64L)
+      assert(spark.read.parquet(dir).count() == 64L)
+    } finally keys.foreach(conf.unset)
+  }
+}
+
+/** A local filesystem under its own scheme whose paths resolve below a
+  * separate root directory (set in the Hadoop configuration), so the
+  * same path string names different files than under `file:`. Statuses
+  * are built here so they carry this filesystem's paths, not the
+  * rebased local ones.
+  */
+class RebasedLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  private var root: String = _
+
+  override def initialize(uri: java.net.URI,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    super.initialize(uri, conf)
+    root = conf.get(RebasedLocalFileSystem.RootKey)
+  }
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${RebasedLocalFileSystem.Scheme}:///")
+  override def getScheme: String = RebasedLocalFileSystem.Scheme
+  override def pathToFile(p: Path): java.io.File =
+    new java.io.File(root, super.pathToFile(p).getPath)
+  override def getFileStatus(p: Path): FileStatus = {
+    val f = pathToFile(p)
+    if (!f.exists()) throw new java.io.FileNotFoundException(p.toString)
+    new FileStatus(f.length, f.isDirectory, 1, getDefaultBlockSize(p),
+      f.lastModified, makeQualified(p))
+  }
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val f = pathToFile(p)
+    if (f.isDirectory) f.list().sorted.map(n => getFileStatus(new Path(p, n)))
+    else Array(getFileStatus(p))
+  }
+}
+
+object RebasedLocalFileSystem {
+  val Scheme = "rebasedlocal"
+  val RootKey = "graft.test.rebasedlocal.root"
 }

@@ -45,6 +45,20 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(!wide.schema.fieldNames.contains("FOO"))
   }
 
+  test("Bronze plan: ONE scan, ONE shuffle, no join") {
+    // dedup, pivot and first-seen coordinates are one aggregate; a
+    // second CSV scan, a second exchange or a join means one of them
+    // was planned as an operator of its own
+    val plan = Bronze.pivotToWide(
+        Bronze.readLongCsv(spark, resource("noaa_long.csv")))
+      .queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
+      s"expected exactly one shuffle:\n$plan")
+    assert(!plan.contains("Join"), s"Bronze must not plan a join:\n$plan")
+    assert("FileScan csv".r.findAllIn(plan).length == 1,
+      s"expected exactly one CSV scan:\n$plan")
+  }
+
   test("golden: I1 arm 2 — null wind imputes from the (year,lat,lon) group avg") {
     val r = byKey(("2024-01-15T00:00:00", "GHCND:TEST1"))
     assert(r.getAs[Double]("avg_wind_speed") == 5.0)
