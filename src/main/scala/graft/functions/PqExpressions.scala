@@ -226,9 +226,12 @@ object NearestCentroidExpr {
     }
 
   /** Winning cid of the cosine argmax — shared by eval and generated
-    * code (static forwarder). Arithmetic is byte-for-byte the HOF
-    * form's: each dot is a left-to-right double accumulation over
-    * min(|a|,|b|) elements ([[DotProductExpr]]'s loop), the cosine is
+    * code (static forwarder). A vector whose length differs from a
+    * centroid's fails loudly, as the PQ kernels do on ragged input: a
+    * dot truncated to the shorter length would rank a plausible but
+    * wrong centroid. Arithmetic is byte-for-byte the HOF form's: each
+    * dot is a left-to-right double accumulation ([[DotProductExpr]]'s
+    * loop), the cosine is
     * dot(v,c) / (sqrt(dot(v,v))·sqrt(dot(c,c))) — dot(v,v) is
     * loop-invariant and hoisted, the identical IEEE value the lambda
     * recomputed per centroid — and ties break to the lowest cid (the
@@ -248,10 +251,13 @@ object NearestCentroidExpr {
     var k = 0
     while (k < cents.length) {
       val c = cents(k)
-      val m = if (n < c.length) n else c.length
+      if (c.length != n) {
+        throw new IllegalArgumentException(
+          s"nearest_centroid: vector dim $n, centroid dim ${c.length}")
+      }
       var dvc = 0.0
       i = 0
-      while (i < m) { dvc += get(i) * c(i); i += 1 }
+      while (i < n) { dvc += get(i) * c(i); i += 1 }
       var dcc = 0.0
       i = 0
       while (i < c.length) { val y = c(i); dcc += y * y; i += 1 }

@@ -749,11 +749,14 @@ object Similarity {
       .collect()
     require(rows.nonEmpty, "ivf: empty centroid frame")
     val cids = rows.map(r => r.get(0) match {
+      case null => throw new IllegalArgumentException(
+        "ivf: null cid in the centroid frame (every centroid needs an id)")
       case i: java.lang.Integer => i.longValue
       case l: java.lang.Long => l.longValue
       case s: java.lang.Short => s.longValue
+      case b: java.lang.Byte => b.longValue
       case o => throw new IllegalArgumentException(
-        s"ivf: integral cid required, got ${Option(o).map(_.getClass)}")
+        s"ivf: integral cid required, got ${o.getClass.getName}")
     }).toSeq
     val cvs = rows.map(r => r.getSeq[Double](1)).toSeq
     graft.functions.PqFunctions.nearestCentroidId(v, cids, cvs)

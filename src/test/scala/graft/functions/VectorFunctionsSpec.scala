@@ -374,6 +374,28 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("zero"))
   }
 
+  test("nearestCentroidId rejects a vector of the wrong dimension") {
+    // a dot truncated to the shorter length would pick a centroid
+    // (cid 1 here) instead of failing; both the interpreted path (a
+    // local relation folds at planning) and the generated one must throw
+    val cids = Seq(1L, 2L)
+    val cents = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0))
+    for (v <- Seq(Seq(1.0f, 0.0f), Seq(1.0f, 0.0f, 0.0f, 5.0f))) {
+      val df = Seq(v).toDF("v")
+      for (in <- Seq(df, df.repartition(1))) {
+        val e = intercept[Exception] {
+          in.select(PqFunctions.nearestCentroidId($"v", cids, cents)).collect()
+        }
+        assert(e.getMessage.contains(s"vector dim ${v.length}, centroid dim 3"),
+          e.getMessage)
+      }
+    }
+    // the matching dimension still assigns
+    assert(Seq(Seq(1.0f, 0.0f, 0.0f)).toDF("v").repartition(1)
+      .select(PqFunctions.nearestCentroidId($"v", cids, cents))
+      .collect()(0).getLong(0) == 1L)
+  }
+
   test("pq/centroid kernels compare structurally (ADVICE r21 equals)") {
     // Seq-backed fields: two independently built but identical
     // expressions must be semantically equal, so subexpression

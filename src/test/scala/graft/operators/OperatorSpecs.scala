@@ -1188,6 +1188,31 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.kmeansCentroids(emb, init, 5).count() == 3)
   }
 
+  test("kmeansCentroids: Byte cids assign like Long cids and keep their type") {
+    val emb = (0L until 24L).map(i =>
+      (i, Seq.tabulate(4)(j => ((i * 5 + j) % 7).toFloat)))
+      .toDF("vec_id", "embedding")
+    val init = emb.orderBy($"vec_id".asc).limit(3)
+      .select($"vec_id".as("cid"), $"embedding".as("__cv"))
+    val byteInit = init.select($"cid".cast("byte").as("cid"), $"__cv")
+    val asLong = Similarity.kmeansCentroids(emb, init, 2)
+      .select($"cid".cast("long"), $"__cv").collect().toSet
+    val asByte = Similarity.kmeansCentroids(emb, byteInit, 2)
+    assert(asByte.schema("cid").dataType == org.apache.spark.sql.types.ByteType)
+    assert(asByte.select($"cid".cast("long"), $"__cv").collect().toSet == asLong)
+  }
+
+  test("kmeansCentroids: a null cid is rejected by name") {
+    val emb = (0L until 8L).map(i => (i, Seq(1f + i, 2f)))
+      .toDF("vec_id", "embedding")
+    val init = Seq((Some(1L), Seq(1f, 0f)), (None, Seq(0f, 1f)))
+      .toDF("cid", "__cv")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.kmeansCentroids(emb, init, 1)
+    }
+    assert(e.getMessage.contains("null cid"), e.getMessage)
+  }
+
   test("hyperplaneNearDupPairs ≡ exact cosineNearDupPairs on planted dups") {
     // Deterministic random base vectors (seeded PRNG per id — background
     // pair sims stay well under the threshold, like the gate corpus) + a

@@ -2,9 +2,10 @@ package graft.weather
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkSpec
+import graft.operators.Persist
 
 /** End-to-end Bronze→Silver golden test over the FIXTURES.md §A fixtures,
   * plus the source/sink surface (S3-S6, F3, F8).
@@ -103,15 +104,54 @@ class WeatherPipelineSpec extends SparkSpec {
       .getAs[java.sql.Date]("Date_1").toString == "2024-03-05")
   }
 
-  test("golden: full Silver output matches the checked-in golden CSV (A4)") {
-    val got = silver.collect().map { r =>
+  private def assertGolden(df: DataFrame): Unit = {
+    val got = df.collect().map { r =>
       (0 until r.length).map(i =>
         if (r.isNullAt(i)) "" else r.get(i).toString).mkString(",")
     }.sorted
     val want = scala.io.Source.fromFile(resource("silver_golden.csv"))
       .getLines().toSeq
-    assert(silver.schema.fieldNames.mkString(",") == want.head)
+    assert(df.schema.fieldNames.mkString(",") == want.head)
     assert(got.toSeq == want.tail.sorted)
+  }
+
+  test("golden: full Silver output matches the checked-in golden CSV (A4)") {
+    assertGolden(silver)
+  }
+
+  test("Silver is staged once: no Gold output re-scans the CSV or " +
+      "re-runs the Bronze shuffle") {
+    val golds = Seq(
+      WeatherGold.stationSeries(silver, "GHCND:TEST1",
+        Seq("Date_1", "avg_temperature_rounded")),
+      WeatherGold.monthlyClimatology(silver, "avg_temperature_rounded"),
+      WeatherGold.yearlyTemperatureTrend(silver),
+      WeatherGold.precipTempCorrelation(silver),
+      WeatherGold.monthYearGeoSummary(silver, Seq("avg_wind_speed")))
+    val bronzeShuffle = "Exchange hashpartitioning\\(date#\\d+, station#\\d+".r
+    golds.foreach { g =>
+      val plan = g.queryExecution.executedPlan.toString
+      assert(!plan.contains("FileScan csv"),
+        s"Gold output re-scans the source CSV:\n$plan")
+      assert(bronzeShuffle.findFirstIn(plan).isEmpty,
+        s"Gold output re-runs the Bronze (date, station) shuffle:\n$plan")
+    }
+  }
+
+  test("Silver on the reliable backend: golden output, staged files " +
+      "under the checkpoint dir") {
+    val dir = Files.createTempDirectory("graft_silver_ckpt")
+    try {
+      spark.conf.set(Persist.CheckpointDirKey, dir.toString)
+      assertGolden(Silver.pipeline(
+        Bronze.pivotToWide(
+          Bronze.readLongCsv(spark, resource("noaa_long.csv"))),
+        Bronze.readStationCsv(spark, resource("stations.csv"))))
+      val staged = Files.walk(dir).filter(Files.isRegularFile(_)).count()
+      assert(staged > 0L, s"no checkpoint files under $dir")
+    } finally {
+      spark.conf.unset(Persist.CheckpointDirKey)
+    }
   }
 
   test("WeatherGold: the reference's Gold analytics over the fixture") {
