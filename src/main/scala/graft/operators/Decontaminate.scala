@@ -102,12 +102,6 @@ object Decontaminate {
       .select(col(idCol), col(benchIdCol)).distinct()
   }
 
-  /** The corpus with contaminated documents REMOVED (all original
-    * columns kept) — the anti-join form for pipelines that drop rather
-    * than label. Joins `docs` against the contamination-sized id frame
-    * directly (no flag-then-filter round trip through a second
-    * corpus-wide join).
-    */
   /** SEMANTIC decontamination — the embedding-space complement of the
     * shingle screens ([[flagContaminated]] catches verbatim excerpts;
     * this catches PARAPHRASED eval leakage, which re-wording defeats
@@ -172,6 +166,12 @@ object Decontaminate {
         coalesce(col("__ms") >= threshold, lit(false)).as("contaminated"))
   }
 
+  /** The corpus with contaminated documents REMOVED (all original
+    * columns kept) — the anti-join form for pipelines that drop rather
+    * than label. Joins `docs` against the contamination-sized id frame
+    * directly (no flag-then-filter round trip through a second
+    * corpus-wide join).
+    */
   def removeContaminated(docs: DataFrame, benchmark: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       n: Int = 13): DataFrame =

@@ -160,10 +160,7 @@ object Dedup {
     * fingerprint window, same as [[exactDedup]].
     *
     * @param corpusFps existing corpus fingerprints, column `fpCol`
-    * @return batch rows: (idCol, canonical_id, is_dup — duplicate within
-    *         the batch, is_known — fingerprint already in the corpus)
-    */
-  /** @param expectedBatchItems sizes the bloom prefilter — set it to the
+    * @param expectedBatchItems sizes the bloom prefilter — set it to the
     *                            (approximate) batch row count; an
     *                            undersized bloom saturates and the
     *                            prefilter degrades to passing the whole
@@ -175,6 +172,8 @@ object Dedup {
     *                      under — a class mismatch silently reports
     *                      every batch doc as novel, the false-negative
     *                      mode this operator exists to prevent
+    * @return batch rows: (idCol, canonical_id, is_dup — duplicate within
+    *         the batch, is_known — fingerprint already in the corpus)
     */
   def incrementalExactDedup(newDocs: DataFrame, corpusFps: DataFrame,
       textCol: String, idCol: String, fpCol: String = "fp",

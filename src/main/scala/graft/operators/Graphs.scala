@@ -12,40 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  /** Damped PageRank (Page, Brin, Motwani & Winograd 1999) over an edge
-    * list — host/domain authority as a curation signal (the link-graph
-    * complement of [[Urls.hostReputation]]'s behavioral screen: a spam
-    * mill can fake its own URLs but not who links to it).
-    *
-    * Published semantics, including danglers: with out-degree deg(u),
-    *
-    *   r'(v) = (1−d)/N + d · ( Σ_{u→v} r(u)/deg(u) + D/N )
-    *
-    * where D = Σ r(u) over dangling nodes (no out-edges) — their mass
-    * redistributes uniformly, so Σ r stays 1 every iteration (spec-
-    * asserted). Nodes = src ∪ dst; a node id must be globally unique
-    * across entity types (prefix them — see q181).
-    *
-    * Determinism (the q151/q167 quantized-contribution discipline):
-    * per-edge contributions r(u)/deg(u) and per-node dangling masses
-    * quantize to 1e-12-granular longs BEFORE their sums, so every
-    * corpus-wide aggregate is an exact integer sum — partition order,
-    * engine, and retry cannot move a rank, and the oracle replays the
-    * iteration exactly (no output rounding needed; mass conservation
-    * bounds every scaled sum by ~10¹², far inside long range — the
-    * bound is total rank mass, not edge count). Granularity, not
-    * correctness, is the N ceiling: absolute rank error per iteration
-    * ≤ ~indegree·1e-12.
-    *
-    * Scale shape: the Lloyd/BPE sequential-round loop — per iteration
-    * one ranks⋈outdeg⋈edges join + a per-destination integer-sum
-    * aggregate (map-side combined; shuffle = node cardinality), ONE
-    * 1-row dangling aggregate collected (metadata; the only driver
-    * value), and the node-sized rank frame localCheckpointed so
-    * iteration i never re-executes iterations < i. Edges and ranks
-    * shuffle on node keys only — no per-iteration full-graph sort, no
-    * adjacency materialization.
-    */
   /** HITS hubs & authorities (Kleinberg, JACM 1999) — [[pageRank]]'s
     * bipartite-shaped sibling: a good HUB points at good authorities, a
     * good AUTHORITY is pointed at by good hubs — the natural centrality
@@ -68,65 +34,50 @@ object Graphs {
   def hits(edges: DataFrame, iterations: Int,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges
-      .where(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .transform(Persist.round)
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct().transform(Persist.round)
+    val e = projectEdges(edges, srcCol, dstCol)
     val scale = 1e9
-    var scores = nodes.withColumn("hub", lit(1.0))
-      .withColumn("auth", lit(1.0)).transform(Persist.round)
-    for (_ <- 1 to iterations) {
-      // each edge-join aggregate materializes ONCE (it feeds both its
+    // One half-round: the quantized `from` scores flow along the edges
+    // (fromKey -> toKey) and their per-node sums, L1-normalized, become
+    // `to`. Authority is (hub, auth, __src, __dst); hub the reverse.
+    def half(scores: DataFrame, from: String, to: String, fromKey: String,
+        toKey: String): DataFrame = {
+      // the edge-join aggregate materializes ONCE (it feeds both its
       // 1-row normalizer and the next node-sized join — without the
       // checkpoint the 2 actions run the edge join twice; measured
       // ~2× on the q183 gate)
-      val araw = scores.select(col("node").as("__src"),
-          round(col("hub") * lit(scale)).cast("long").as("__qh"))
-        .join(e, Seq("__src"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__qh")).as("__ar"))
+      val raw = scores.select(col("node").as(fromKey),
+          round(col(from) * lit(scale)).cast("long").as("__q"))
+        .join(e, Seq(fromKey))
+        .groupBy(col(toKey).as("node"))
+        .agg(sum(col("__q")).as("__r"))
         .transform(Persist.round)
-      // L1 normalizers as 1-row aggregates cross-joined into the score
+      // L1 normalizer as a 1-row aggregate cross-joined into the score
       // update instead of collected (round 21, the [[prRounds]] fusion):
-      // each was a separate Spark job per half-iteration; the long→
+      // it was a separate Spark job per half-iteration; the long→
       // double cast and the division are the same IEEE operations the
       // collected-literal form performed, so scores are bit-identical.
       // fail-loud on an empty aggregate (ADVICE r21): the collected
       // form's getLong(0) threw on a NULL sum (empty edge set); the
       // fused form would silently NULL every score. The guard runs on
       // the 1-row frame only — zero per-edge cost.
-      def failLoud(tot: Column, what: String): Column =
-        when(tot.isNull, raise_error(
-          lit(s"hits: empty $what aggregate (no edges?)"))).otherwise(tot)
-      val aTot = araw.agg(sum(col("__ar")).as("__t"))
-        .select(failLoud(col("__t"), "auth").as("__at"))
-      val withAuth = scores.drop("auth")
-        .join(araw, Seq("node"), "left")
-        .crossJoin(aTot)
-        .withColumn("auth",
-          coalesce(col("__ar"), lit(0L)).cast("double") /
-            col("__at").cast("double"))
-        .drop("__ar", "__at").transform(Persist.round)
-      val hraw = withAuth.select(col("node").as("__dst"),
-          round(col("auth") * lit(scale)).cast("long").as("__qa"))
-        .join(e, Seq("__dst"))
-        .groupBy(col("__src").as("node"))
-        .agg(sum(col("__qa")).as("__hr"))
-        .transform(Persist.round)
-      val hTot = hraw.agg(sum(col("__hr")).as("__t"))
-        .select(failLoud(col("__t"), "hub").as("__ht"))
-      scores = withAuth.drop("hub")
-        .join(hraw, Seq("node"), "left")
-        .crossJoin(hTot)
-        .withColumn("hub",
-          coalesce(col("__hr"), lit(0L)).cast("double") /
-            col("__ht").cast("double"))
-        .drop("__hr", "__ht")
+      val tot = raw.agg(sum(col("__r")).as("__t"))
+        .select(when(col("__t").isNull, raise_error(
+          lit(s"hits: empty $to aggregate (no edges?)")))
+          .otherwise(col("__t")).as("__t"))
+      scores.drop(to)
+        .join(raw, Seq("node"), "left")
+        .crossJoin(tot)
+        .withColumn(to,
+          coalesce(col("__r"), lit(0L)).cast("double") /
+            col("__t").cast("double"))
         .select(col("node"), col("hub"), col("auth"))
         .transform(Persist.round)
+    }
+    var scores = nodeSpine(e).withColumn("hub", lit(1.0))
+      .withColumn("auth", lit(1.0)).transform(Persist.round)
+    for (_ <- 1 to iterations) {
+      scores = half(half(scores, "hub", "auth", "__src", "__dst"),
+        "auth", "hub", "__dst", "__src")
     }
     scores
   }
@@ -336,14 +287,58 @@ object Graphs {
     deg
   }
 
+  /** Damped PageRank (Page, Brin, Motwani & Winograd 1999) over an edge
+    * list — host/domain authority as a curation signal (the link-graph
+    * complement of [[Urls.hostReputation]]'s behavioral screen: a spam
+    * mill can fake its own URLs but not who links to it).
+    *
+    * Published semantics, including danglers: with out-degree deg(u),
+    *
+    *   r'(v) = (1−d)/N + d · ( Σ_{u→v} r(u)/deg(u) + D/N )
+    *
+    * where D = Σ r(u) over dangling nodes (no out-edges) — their mass
+    * redistributes uniformly, so Σ r stays 1 every iteration (spec-
+    * asserted). Nodes = src ∪ dst; a node id must be globally unique
+    * across entity types (prefix them — see q181).
+    *
+    * Determinism (the q151/q167 quantized-contribution discipline):
+    * per-edge contributions r(u)/deg(u) and per-node dangling masses
+    * quantize to 1e-12-granular longs BEFORE their sums, so every
+    * corpus-wide aggregate is an exact integer sum — partition order,
+    * engine, and retry cannot move a rank, and the oracle replays the
+    * iteration exactly (no output rounding needed; mass conservation
+    * bounds every scaled sum by ~10¹², far inside long range — the
+    * bound is total rank mass, not edge count). Granularity, not
+    * correctness, is the N ceiling: absolute rank error per iteration
+    * ≤ ~indegree·1e-12. The update is evaluated as
+    * (1−d)/n + d·(cs/scale + (dang/scale)/n), every literal and
+    * association mirrored by the oracle.
+    *
+    * Scale shape: the Lloyd/BPE sequential-round loop — per iteration
+    * one ranks⋈outdeg⋈edges join + a per-destination integer-sum
+    * aggregate (map-side combined; shuffle = node cardinality), ONE
+    * 1-row dangling aggregate cross-joined into the rank update (no
+    * driver value per round), and the node-sized rank frame staged
+    * through [[Persist.round]] so iteration i never re-executes
+    * iterations < i: one action per round. The edge projection is
+    * materialized once and feeds the node spine, the out-table and
+    * every round's contribution join. Edges and ranks shuffle on node
+    * keys only — no per-iteration full-graph sort, no adjacency
+    * materialization.
+    *
+    * All five PageRank entry points (this one, [[resumePageRank]],
+    * [[weightedPageRank]], [[personalizedPageRank]],
+    * [[weightedPersonalizedPageRank]]) run this same round body; each
+    * supplies only its spine, out-table aggregate, initial ranks,
+    * contribution and update expressions. So the determinism and scale
+    * shape above hold for all five, and a fix to the loop reaches all
+    * five at once.
+    */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0.0 && damping < 1.0,
-      s"damping must be in (0, 1), got $damping")
-    val (e, nodes, n) = prProject(edges, srcCol, dstCol)
-    val init = nodes.withColumn("rank", lit(1.0 / n))
-    prRounds(e, nodes, n, init, iterations, damping)
+    prGuards(iterations, damping)
+    prGlobal(projectEdges(edges, srcCol, dstCol), count(lit(1)), prContrib,
+      iterations, damping)((nodes, n) => nodes.withColumn("rank", lit(1.0 / n)))
   }
 
   /** Warm-start continuation of [[pageRank]] — incremental rank
@@ -364,9 +359,9 @@ object Graphs {
     * Two contracts, both gated:
     *  - EXACT RESUME (the value oracle, q232): on an unchanged graph,
     *    `resumePageRank(pageRank(e, k), e, m)` ≡ `pageRank(e, k+m)`
-    *    round for round — same quantized-contribution arithmetic, same
-    *    literals, so the composition is replayed by the same unrolled
-    *    CTE oracle as a (k+m)-round run.
+    *    round for round — the same round body with the same
+    *    contribution and update expressions, so the composition is
+    *    replayed by the same unrolled CTE oracle as a (k+m)-round run.
     *  - WARM-START WINS (the spec): after equal rounds on a grown
     *    graph, the warm start sits strictly closer (L1) to the
     *    converged fixpoint than the cold start.
@@ -380,9 +375,7 @@ object Graphs {
       damping: Double = 0.85, srcCol: String = "src",
       dstCol: String = "dst", nodeCol: String = "node",
       rankCol: String = "rank"): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0.0 && damping < 1.0,
-      s"damping must be in (0, 1), got $damping")
+    prGuards(iterations, damping)
     val stored = ranks.select(col(nodeCol).as("node"),
       col(rankCol).cast("double").as("__r0"))
     val dup = stored.agg(count(lit(1)), count_distinct(col("node")))
@@ -391,74 +384,10 @@ object Graphs {
       s"resumePageRank: stored ranks carry ${dup.getLong(0)} rows over " +
         s"${dup.getLong(1)} distinct nodes — a duplicate node would " +
         "contribute twice; dedup the rank table first")
-    val (e, nodes, n) = prProject(edges, srcCol, dstCol)
-    val init = nodes.join(stored, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__r0"), lit(1.0 / n)).as("rank"))
-    prRounds(e, nodes, n, init, iterations, damping)
-  }
-
-  /** Shared head of [[pageRank]]/[[resumePageRank]]: the narrow edge
-    * projection, the node spine, and the node count. Materialized ONCE
-    * (the hostReputation lesson): the caller's edge derivation may be
-    * a join+distinct over the raw corpus, and it feeds nodes, deg, and
-    * every iteration's contribution join — without this it re-executes
-    * ~2+iterations times (measured 2.5× on the q181 gate).
-    */
-  private def prProject(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, DataFrame, Double) = {
-    val e = edges
-      .where(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .transform(Persist.round)
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct().transform(Persist.round)
-    (e, nodes, nodes.count().toDouble)
-  }
-
-  /** The quantized-contribution power-iteration rounds shared by
-    * [[pageRank]] (uniform init) and [[resumePageRank]] (stored init)
-    * — one body, so a fix to either cannot silently miss the other and
-    * the exact-resume identity holds by construction.
-    */
-  private def prRounds(e: DataFrame, nodes: DataFrame, n: Double,
-      init: DataFrame, iterations: Int, damping: Double): DataFrame = {
-    val deg = e.groupBy(col("__src").as("node"))
-      .agg(count(lit(1)).as("__outdeg")).transform(Persist.round)
-    val scale = 1e12
-    var ranks = init.transform(Persist.round)
-    for (_ <- 1 to iterations) {
-      val withDeg = ranks.join(deg, Seq("node"), "left")
-      val contrib = withDeg.where(col("__outdeg").isNotNull)
-        .join(e.withColumnRenamed("__src", "node"), Seq("node"))
-        .select(col("__dst").as("node"),
-          round(col("rank") / col("__outdeg").cast("double") * lit(scale))
-            .cast("long").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__cs"))
-      // dangling mass as a 1-row aggregate CROSS-JOINED into the rank
-      // update instead of collected per round (round 21): the collect
-      // was a second Spark job per iteration re-running the ranks⋈deg
-      // join; fused, each round is ONE action (the checkpoint). The
-      // long→double cast and the /scale/n association are the exact
-      // IEEE operations the collected-literal form performed on the
-      // driver, so every rank is bit-identical and the oracle replay
-      // is unchanged.
-      val dang = withDeg.where(col("__outdeg").isNull)
-        .agg(coalesce(sum(round(col("rank") * lit(scale)).cast("long")),
-          lit(0L)).as("__dang"))
-      // association order mirrored literally by the oracle:
-      // (1-d)/n + d * (cs/scale + (dang/scale)/n)
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(dang)
-        .select(col("node"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("__cs"), lit(0L)).cast("double") / lit(scale) +
-              (col("__dang").cast("double") / lit(scale)) / lit(n)))
-            .as("rank"))
-        .transform(Persist.round)
-    }
-    ranks
+    prGlobal(projectEdges(edges, srcCol, dstCol), count(lit(1)), prContrib,
+      iterations, damping)((nodes, n) =>
+      nodes.join(stored, Seq("node"), "left")
+        .select(col("node"), coalesce(col("__r0"), lit(1.0 / n)).as("rank")))
   }
 
   /** Edge-weighted PageRank (the Xing–Ghorbani WI'04 generalization of
@@ -479,18 +408,9 @@ object Graphs {
     * Parallel edges sum their weights (the natural multigraph
     * collapse: two 3-unit orders ≡ one 6-unit order).
     *
-    * Determinism (the [[pageRank]] discipline, oracle-mirrored literal
-    * for literal): per-edge contributions quantize to 1e-12-scaled
-    * longs BEFORE the corpus-wide sum — round(rank·(w/W)·scale) — so
-    * no float addition order can shift a rank; dangling mass (nodes
-    * with no out-edges) redistributes uniformly, collected as ONE long
-    * per round; the update is (1−d)/n + d·(cs/scale + (dang/scale)/n).
-    *
-    * Scale shape: identical to [[pageRank]] — the edge projection
-    * (with summed weights and the guard applied) checkpoints once and
-    * feeds nodes, the out-weight table, and every round's contribution
-    * join; per-round shuffle is one node-keyed join + aggregate; the
-    * only collect is the 1-row dangling mass.
+    * Determinism and scale shape: [[pageRank]]'s round body, with
+    * contributions round(rank·(w/W)·scale) and the out-table summing
+    * weights; the guarded, summed edge projection checkpoints once.
     *
     * @param weightCol long-typed (or losslessly castable) POSITIVE
     *                  edge weight; lossy casts and w ≤ 0 raise
@@ -499,71 +419,10 @@ object Graphs {
   def weightedPageRank(edges: DataFrame, iterations: Int,
       damping: Double = 0.85, srcCol: String = "src",
       dstCol: String = "dst", weightCol: String = "w"): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0.0 && damping < 1.0,
-      s"damping must be in (0, 1), got $damping")
-    val e = edges
-      .where(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(weightCol).isNotNull)
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        // positivity is enforced PER EDGE, before the parallel-edge
-        // sum (ADVICE r18): a negative weight masked by a positive
-        // parallel edge (+5 and -3 on the same src/dst sum to +2)
-        // would otherwise pass the post-sum check while injecting a
-        // negative rank contribution.
-        when(col(weightCol).cast("long") =!= col(weightCol),
-          raise_error(concat(
-            lit("weightedPageRank: weight not losslessly castable to " +
-              "long (quantize first): "),
-            col(weightCol).cast("string"))))
-          .when(col(weightCol).cast("long") <= 0L,
-            raise_error(concat(
-              lit("weightedPageRank requires positive weights; got "),
-              col(weightCol).cast("string"))))
-          .otherwise(col(weightCol).cast("long")).as("__w"))
-      .groupBy(col("__src"), col("__dst"))
-      .agg(sum(col("__w")).as("__w"))
-      .transform(Persist.round)
-    // eager 1-row pass: forces the per-edge guards above to fire at
-    // call time (Persist.round's backends are eager too — this is the
-    // belt-and-braces that keeps the raise out of the caller's first
-    // action even if a backend ever turns lazy)
-    e.agg(coalesce(min(col("__w")), lit(1L))).collect()
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct().transform(Persist.round)
-    val n = nodes.count().toDouble
-    val outW = e.groupBy(col("__src").as("node"))
-      .agg(sum(col("__w")).as("__outw")).transform(Persist.round)
-    val scale = 1e12
-    var ranks = nodes.withColumn("rank", lit(1.0 / n)).transform(Persist.round)
-    for (_ <- 1 to iterations) {
-      val withW = ranks.join(outW, Seq("node"), "left")
-      val contrib = withW.where(col("__outw").isNotNull)
-        .join(e.withColumnRenamed("__src", "node"), Seq("node"))
-        .select(col("__dst").as("node"),
-          // association mirrored by the oracle:
-          // round(rank * (w / W) * scale)
-          round(col("rank") *
-            (col("__w").cast("double") / col("__outw").cast("double")) *
-            lit(scale)).cast("long").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__cs"))
-      // fused 1-row dangling aggregate (round 21; see [[prRounds]]) —
-      // same IEEE cast/divide chain as the collected literal, one
-      // action per round instead of two
-      val dang = withW.where(col("__outw").isNull)
-        .agg(coalesce(sum(round(col("rank") * lit(scale)).cast("long")),
-          lit(0L)).as("__dang"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(dang)
-        .select(col("node"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("__cs"), lit(0L)).cast("double") / lit(scale) +
-              (col("__dang").cast("double") / lit(scale)) / lit(n)))
-            .as("rank"))
-        .transform(Persist.round)
-    }
-    ranks
+    prGuards(iterations, damping)
+    prGlobal(weightedEdges(edges, srcCol, dstCol, weightCol,
+        "weightedPageRank"), sum(col("__w")), prWeightedContrib,
+      iterations, damping)((nodes, n) => nodes.withColumn("rank", lit(1.0 / n)))
   }
 
   /** [[weightedPageRank]] × [[personalizedPageRank]] — the full matrix
@@ -576,7 +435,7 @@ object Graphs {
     * [[weightedPageRank]] (longs; lossy casts raise; w ≤ 0 fails loud;
     * parallel edges sum), same seed contract as
     * [[personalizedPageRank]] (absent seeds fail loud, unreachable
-    * nodes report exactly 0.0), same quantized-round determinism —
+    * nodes report exactly 0.0), same round body as [[pageRank]] —
     * update rank' = (1−d)·p + d·(cs/scale + (dang/scale)·p) with
     * contributions round(rank·(w/W)·scale), oracle-mirrored literally.
     */
@@ -584,73 +443,10 @@ object Graphs {
       iterations: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
       weightCol: String = "w", seedCol: String = "node"): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0.0 && damping < 1.0,
-      s"damping must be in (0, 1), got $damping")
-    val e = edges
-      .where(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(weightCol).isNotNull)
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        // per-edge positivity BEFORE the parallel-edge sum (ADVICE
-        // r18; see [[weightedPageRank]] — a masked negative edge must
-        // not pass)
-        when(col(weightCol).cast("long") =!= col(weightCol),
-          raise_error(concat(
-            lit("weightedPersonalizedPageRank: weight not losslessly " +
-              "castable to long (quantize first): "),
-            col(weightCol).cast("string"))))
-          .when(col(weightCol).cast("long") <= 0L,
-            raise_error(concat(
-              lit("weightedPersonalizedPageRank requires positive " +
-                "weights; got "),
-              col(weightCol).cast("string"))))
-          .otherwise(col(weightCol).cast("long")).as("__w"))
-      .groupBy(col("__src"), col("__dst"))
-      .agg(sum(col("__w")).as("__w"))
-      .transform(Persist.round)
-    // eager guard-firing pass, as in [[weightedPageRank]]
-    e.agg(coalesce(min(col("__w")), lit(1L))).collect()
-    val nodes = e.select(col("__src").as("node"))
-      .unionByName(e.select(col("__dst").as("node")))
-      .distinct().transform(Persist.round)
-    val sd = broadcast(
-      seeds.select(col(seedCol).as("node")).distinct())
-    val ns = nodes.join(sd, Seq("node"), "left_semi").count()
-    require(ns > 0, "no seed node is present in the edge list")
-    val outW = e.groupBy(col("__src").as("node"))
-      .agg(sum(col("__w")).as("__outw")).transform(Persist.round)
-    val pref = nodes
-      .join(sd.withColumn("__s", lit(1)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__s").isNotNull, lit(1.0 / ns.toDouble))
-          .otherwise(lit(0.0)).as("__p"))
-      .transform(Persist.round)
-    val scale = 1e12
-    var ranks = pref.select(col("node"), col("__p").as("rank"))
-      .transform(Persist.round)
-    for (_ <- 1 to iterations) {
-      val withW = ranks.join(outW, Seq("node"), "left")
-      val contrib = withW.where(col("__outw").isNotNull)
-        .join(e.withColumnRenamed("__src", "node"), Seq("node"))
-        .select(col("__dst").as("node"),
-          round(col("rank") *
-            (col("__w").cast("double") / col("__outw").cast("double")) *
-            lit(scale)).cast("long").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__cs"))
-      // fused 1-row dangling aggregate (round 21; see [[prRounds]])
-      val dang = withW.where(col("__outw").isNull)
-        .agg(coalesce(sum(round(col("rank") * lit(scale)).cast("long")),
-          lit(0L)).as("__dang"))
-      ranks = pref.join(contrib, Seq("node"), "left")
-        .crossJoin(dang)
-        .select(col("node"),
-          (lit(1.0 - damping) * col("__p") + lit(damping) *
-            (coalesce(col("__cs"), lit(0L)).cast("double") / lit(scale) +
-              (col("__dang").cast("double") / lit(scale)) * col("__p")))
-            .as("rank"))
-        .transform(Persist.round)
-    }
-    ranks
+    prGuards(iterations, damping)
+    prSeeded(weightedEdges(edges, srcCol, dstCol, weightCol,
+        "weightedPersonalizedPageRank"), seeds, seedCol, sum(col("__w")),
+      prWeightedContrib, iterations, damping)
   }
 
   /** Personalized PageRank (Page et al. 1999 §6; Jeh & Widom WWW'03):
@@ -663,19 +459,14 @@ object Graphs {
     * fraud blast-radius weighting) that global PageRank by definition
     * cannot answer.
     *
-    * Same determinism discipline as [[pageRank]]: per-edge
-    * contributions quantize to 1e-12-scaled longs BEFORE every
-    * corpus-wide sum; each round collects ONE metadata row (the
-    * dangling mass); the update is literal-mirrored by the oracle —
+    * Same round body and determinism discipline as [[pageRank]]; the
+    * update is literal-mirrored by the oracle —
     * rank' = (1−d)·p + d·(cs/scale + (dang/scale)·p), with p = 1/|S∩V|
     * on seeds and 0.0 elsewhere. Ranks start AT the preference vector
     * (the standard PPR initialization — mass already at the seeds).
-    * Nodes unreachable from the seeds report exactly 0.0.
-    *
-    * Scale shape: identical to [[pageRank]] (edge projection
-    * checkpointed once, node-keyed contribution join + aggregate per
-    * round) plus one broadcast seed join when the preference vector is
-    * built — seeds are query metadata, never corpus-sized.
+    * Nodes unreachable from the seeds report exactly 0.0. The seeds add
+    * one broadcast join when the preference vector is built — seeds
+    * are query metadata, never corpus-sized.
     *
     * Seeds absent from the graph carry no mass (they can neither emit
     * nor receive through edges); the preference vector normalizes over
@@ -690,52 +481,152 @@ object Graphs {
       iterations: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
       seedCol: String = "node"): DataFrame = {
+    prGuards(iterations, damping)
+    prSeeded(projectEdges(edges, srcCol, dstCol), seeds, seedCol,
+      count(lit(1)), prContrib, iterations, damping)
+  }
+
+  private def prGuards(iterations: Int, damping: Double): Unit = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
-    val e = edges
-      .where(col(srcCol).isNotNull && col(dstCol).isNotNull)
+  }
+
+  /** The null-dropping (__src, __dst) edge projection shared by the
+    * PageRank family and [[hits]]. Materialized ONCE (the
+    * hostReputation lesson): the caller's edge derivation may be a
+    * join+distinct over the raw corpus, and it feeds the node spine,
+    * the out-table, and every iteration's contribution join — without
+    * this it re-executes ~2+iterations times (measured 2.5× on the q181
+    * gate).
+    */
+  private def projectEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.where(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .transform(Persist.round)
-    val nodes = e.select(col("__src").as("node"))
+
+  /** The staged node spine src ∪ dst of a projected edge frame. It runs
+    * no count: callers that need the node count pay for it themselves.
+    */
+  private def nodeSpine(e: DataFrame): DataFrame =
+    e.select(col("__src").as("node"))
       .unionByName(e.select(col("__dst").as("node")))
       .distinct().transform(Persist.round)
-    val sd = broadcast(
-      seeds.select(col(seedCol).as("node")).distinct())
+
+  /** The weighted variants' (__src, __dst, __w) projection: per-edge
+    * guards, then parallel edges summed. Positivity is enforced PER
+    * EDGE, before the parallel-edge sum (ADVICE r18): a negative weight
+    * masked by a positive parallel edge (+5 and -3 on the same src/dst
+    * sum to +2) would otherwise pass a post-sum check while injecting a
+    * negative rank contribution. Each raise names `caller`.
+    */
+  private def weightedEdges(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: String, caller: String): DataFrame = {
+    val w = col(weightCol)
+    val e = edges
+      .where(col(srcCol).isNotNull && col(dstCol).isNotNull && w.isNotNull)
+      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
+        when(w.cast("long") =!= w, raise_error(concat(
+            lit(s"$caller: weight not losslessly castable to long " +
+              "(quantize first): "), w.cast("string"))))
+          .when(w.cast("long") <= 0L, raise_error(concat(
+            lit(s"$caller requires positive weights; got "),
+            w.cast("string"))))
+          .otherwise(w.cast("long")).as("__w"))
+      .groupBy(col("__src"), col("__dst"))
+      .agg(sum(col("__w")).as("__w"))
+      .transform(Persist.round)
+    // eager 1-row pass: forces the per-edge guards above to fire at
+    // call time (Persist.round's backends are eager too — this is the
+    // belt-and-braces that keeps the raise out of the caller's first
+    // action even if a backend ever turns lazy)
+    e.agg(coalesce(min(col("__w")), lit(1L))).collect()
+    e
+  }
+
+  private val PrScale = 1e12
+
+  /** Per-edge contribution times the scale: rank/deg for the unweighted
+    * variants, rank·(w/W) for the weighted ones (association mirrored
+    * by the oracles).
+    */
+  private def prContrib: Column =
+    col("rank") / col("__out").cast("double") * lit(PrScale)
+  private def prWeightedContrib: Column =
+    col("rank") *
+      (col("__w").cast("double") / col("__out").cast("double")) * lit(PrScale)
+
+  /** The global-teleport variants over the node spine, with the node
+    * count n: rank' = (1−d)/n + d·(cs/scale + (dang/scale)/n).
+    */
+  private def prGlobal(e: DataFrame, out: Column, contrib: Column,
+      iterations: Int, damping: Double)(
+      init: (DataFrame, Double) => DataFrame): DataFrame = {
+    val nodes = nodeSpine(e)
+    val n = nodes.count().toDouble
+    prRounds(e, nodes, out, init(nodes, n), iterations, contrib,
+      (cs, dang) => lit((1.0 - damping) / n) + lit(damping) *
+        (cs + dang / lit(n)))
+  }
+
+  /** The seeded variants: ranks start at, and restart and dangling mass
+    * land on, the preference vector p (1/|S∩V| on the seeds present,
+    * 0.0 elsewhere): rank' = (1−d)·p + d·(cs/scale + (dang/scale)·p).
+    */
+  private def prSeeded(e: DataFrame, seeds: DataFrame, seedCol: String,
+      out: Column, contrib: Column, iterations: Int,
+      damping: Double): DataFrame = {
+    val nodes = nodeSpine(e)
+    val sd = broadcast(seeds.select(col(seedCol).as("node")).distinct())
     val ns = nodes.join(sd, Seq("node"), "left_semi").count()
     require(ns > 0, "no seed node is present in the edge list")
-    val deg = e.groupBy(col("__src").as("node"))
-      .agg(count(lit(1)).as("__outdeg")).transform(Persist.round)
     val pref = nodes
       .join(sd.withColumn("__s", lit(1)), Seq("node"), "left")
       .select(col("node"),
         when(col("__s").isNotNull, lit(1.0 / ns.toDouble))
           .otherwise(lit(0.0)).as("__p"))
       .transform(Persist.round)
-    val scale = 1e12
-    var ranks = pref.select(col("node"), col("__p").as("rank"))
-      .transform(Persist.round)
+    prRounds(e, pref, out, pref.select(col("node"), col("__p").as("rank")),
+      iterations, contrib, (cs, dang) => lit(1.0 - damping) * col("__p") +
+        lit(damping) * (cs + dang * col("__p")))
+  }
+
+  /** The quantized-contribution round body of all five PageRank entry
+    * points — one body, so a fix cannot miss a variant and the
+    * exact-resume identity holds by construction. `out` aggregates each
+    * source's edges into `__out`; `contrib` is the scaled per-edge
+    * contribution over (rank, __out, edge columns); `update` maps
+    * (cs/scale, dang/scale) to the new rank over `spine`'s columns.
+    */
+  private def prRounds(e: DataFrame, spine: DataFrame, out: Column,
+      init: DataFrame, iterations: Int, contrib: Column,
+      update: (Column, Column) => Column): DataFrame = {
+    val outTable = e.groupBy(col("__src").as("node"))
+      .agg(out.as("__out")).transform(Persist.round)
+    var ranks = init.transform(Persist.round)
     for (_ <- 1 to iterations) {
-      val withDeg = ranks.join(deg, Seq("node"), "left")
-      val contrib = withDeg.where(col("__outdeg").isNotNull)
+      val withOut = ranks.join(outTable, Seq("node"), "left")
+      val cs = withOut.where(col("__out").isNotNull)
         .join(e.withColumnRenamed("__src", "node"), Seq("node"))
-        .select(col("__dst").as("node"),
-          round(col("rank") / col("__outdeg").cast("double") * lit(scale))
-            .cast("long").as("__c"))
+        .select(col("__dst").as("node"), round(contrib).cast("long").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__cs"))
-      // fused 1-row dangling aggregate (round 21; see [[prRounds]])
-      val dang = withDeg.where(col("__outdeg").isNull)
-        .agg(coalesce(sum(round(col("rank") * lit(scale)).cast("long")),
+      // dangling mass as a 1-row aggregate CROSS-JOINED into the rank
+      // update instead of collected per round (round 21): the collect
+      // was a second Spark job per iteration re-running the ranks⋈out
+      // join; fused, each round is ONE action (the checkpoint). The
+      // long→double cast and the /scale association are the exact
+      // IEEE operations the collected-literal form performed on the
+      // driver, so every rank is bit-identical and the oracle replay
+      // is unchanged.
+      val dang = withOut.where(col("__out").isNull)
+        .agg(coalesce(sum(round(col("rank") * lit(PrScale)).cast("long")),
           lit(0L)).as("__dang"))
-      // association order mirrored literally by the oracle:
-      // (1-d)*p + d * (cs/scale + (dang/scale)*p)
-      ranks = pref.join(contrib, Seq("node"), "left")
+      ranks = spine.join(cs, Seq("node"), "left")
         .crossJoin(dang)
-        .select(col("node"),
-          (lit(1.0 - damping) * col("__p") + lit(damping) *
-            (coalesce(col("__cs"), lit(0L)).cast("double") / lit(scale) +
-              (col("__dang").cast("double") / lit(scale)) * col("__p")))
-            .as("rank"))
+        .select(col("node"), update(
+          coalesce(col("__cs"), lit(0L)).cast("double") / lit(PrScale),
+          col("__dang").cast("double") / lit(PrScale)).as("rank"))
         .transform(Persist.round)
     }
     ranks

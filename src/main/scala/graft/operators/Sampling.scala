@@ -436,26 +436,6 @@ object Sampling {
           .as("sampling_weight"))
   }
 
-  /** Strided context-window chunking — the LM-training complement of
-    * [[packSequences]]: instead of packing whole short documents into a
-    * budget, slice each LONG document into overlapping `seqLen`-token
-    * windows starting every `stride` tokens (stride < seqLen ⇒ overlap,
-    * the standard perplexity/fine-tuning windowing; stride = seqLen ⇒
-    * disjoint blocks). Every token of the document appears in at least
-    * one chunk; the final window is short when the tail is (standard LM
-    * convention — it is padded downstream, not dropped here).
-    *
-    * Output: (id, chunk_id, start_tok, chunk_tokens, chunk_text) —
-    * chunk_id = start_tok / stride. Token-free documents produce no
-    * chunks.
-    *
-    * Scale shape: a pure per-row projection + a bounded generator (at
-    * most ceil(n/stride) rows per document) — NO shuffle anywhere; the
-    * output is bigger than the input by design (the overlap factor
-    * ~seqLen/stride), which is the materialization cost of the operator,
-    * not a plan defect. Tokenization is the repo's whitespace kernel
-    * ([[TextAnalysis.tokens]]), evaluated once per row.
-    */
   /** Executes a [[domainMixPlan]] — the materialization half of the
     * mixing loop the planner only PLANS: a sampling weight w per domain
     * becomes floor(w) deterministic epoch copies of every document plus
@@ -557,32 +537,6 @@ object Sampling {
       .unionByName(inner.select(col(idCol), col("score"), col("n_tokens")))
   }
 
-  /** Per-group quality gate (the FineWeb/CCNet "keep the best p% of each
-    * domain" step): keep every row whose score reaches its group's
-    * `percentile_disc(1 − keepFrac)` cutpoint. A GLOBAL quantile filter
-    * lets a single high-quality domain crowd out every other one; the
-    * per-group form preserves domain diversity while enforcing a uniform
-    * quality bar inside each domain.
-    *
-    * Cutpoint semantics are SQL-standard `percentile_disc` — an actual
-    * score from the data (smallest value with cume_dist ≥ p), so the
-    * filter is exact and engine-portable (same multiset → same cutpoint;
-    * no interpolation arithmetic to drift). Ties AT the cutpoint are all
-    * kept — the kept fraction is ≥ `keepFrac`, never a tie-broken
-    * approximation of it (deterministic, append-order-free).
-    *
-    * Scale shape: cutpoints come from a grouped aggregate over the
-    * (group, score) PROJECTION — two narrow columns shuffle, the
-    * documents never do — and the group cardinality is domain-sized
-    * (config-scale), so the cutpoint table broadcasts back as metadata.
-    * `percentile_disc` is not map-side combinable (it needs the group's
-    * value multiset), but the multiset it gathers is per-group scores
-    * only; at 100 TB with skewed domains the score column can be
-    * pre-binned (scores here are bounded rationals) — the same
-    * bucket-then-rank move [[selectByTokenBudget]] makes — before
-    * resorting to that, measure: a shuffle of 12 bytes/row is ~1% of a
-    * document shuffle.
-    */
   /** Per-group quantile PARTITION — the CCNet move one step past
     * [[filterTopQuantileByGroup]]'s keep/drop: label every row with which
     * per-group score band it falls in (CCNet trains its LM filter on
@@ -635,6 +589,32 @@ object Sampling {
       .drop(fractions.indices.map(i => s"__c$i"): _*)
   }
 
+  /** Per-group quality gate (the FineWeb/CCNet "keep the best p% of each
+    * domain" step): keep every row whose score reaches its group's
+    * `percentile_disc(1 − keepFrac)` cutpoint. A GLOBAL quantile filter
+    * lets a single high-quality domain crowd out every other one; the
+    * per-group form preserves domain diversity while enforcing a uniform
+    * quality bar inside each domain.
+    *
+    * Cutpoint semantics are SQL-standard `percentile_disc` — an actual
+    * score from the data (smallest value with cume_dist ≥ p), so the
+    * filter is exact and engine-portable (same multiset → same cutpoint;
+    * no interpolation arithmetic to drift). Ties AT the cutpoint are all
+    * kept — the kept fraction is ≥ `keepFrac`, never a tie-broken
+    * approximation of it (deterministic, append-order-free).
+    *
+    * Scale shape: cutpoints come from a grouped aggregate over the
+    * (group, score) PROJECTION — two narrow columns shuffle, the
+    * documents never do — and the group cardinality is domain-sized
+    * (config-scale), so the cutpoint table broadcasts back as metadata.
+    * `percentile_disc` is not map-side combinable (it needs the group's
+    * value multiset), but the multiset it gathers is per-group scores
+    * only; at 100 TB with skewed domains the score column can be
+    * pre-binned (scores here are bounded rationals) — the same
+    * bucket-then-rank move [[selectByTokenBudget]] makes — before
+    * resorting to that, measure: a shuffle of 12 bytes/row is ~1% of a
+    * document shuffle.
+    */
   def filterTopQuantileByGroup(df: DataFrame, groupCol: String,
       score: Column, keepFrac: Double): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0,
@@ -720,6 +700,26 @@ object Sampling {
       .drop("__h", "__rn")
   }
 
+  /** Strided context-window chunking — the LM-training complement of
+    * [[packSequences]]: instead of packing whole short documents into a
+    * budget, slice each LONG document into overlapping `seqLen`-token
+    * windows starting every `stride` tokens (stride < seqLen ⇒ overlap,
+    * the standard perplexity/fine-tuning windowing; stride = seqLen ⇒
+    * disjoint blocks). Every token of the document appears in at least
+    * one chunk; the final window is short when the tail is (standard LM
+    * convention — it is padded downstream, not dropped here).
+    *
+    * Output: (id, chunk_id, start_tok, chunk_tokens, chunk_text) —
+    * chunk_id = start_tok / stride. Token-free documents produce no
+    * chunks.
+    *
+    * Scale shape: a pure per-row projection + a bounded generator (at
+    * most ceil(n/stride) rows per document) — NO shuffle anywhere; the
+    * output is bigger than the input by design (the overlap factor
+    * ~seqLen/stride), which is the materialization cost of the operator,
+    * not a plan defect. Tokenization is the repo's whitespace kernel
+    * ([[TextAnalysis.tokens]]), evaluated once per row.
+    */
   def stridedChunks(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", seqLen: Int = 64,
       stride: Int = 48): DataFrame = {

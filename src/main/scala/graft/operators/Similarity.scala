@@ -64,10 +64,6 @@ final case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame,
   */
 object Similarity {
 
-  /** Cosine similarity of two float-array columns, accumulated in double
-    * (left-to-right, same order as the oracle's list_sum — engine-exact
-    * up to final-ulp noise, which the 4-decimal rounding absorbs).
-    */
   /** Dot product of two float-array columns in double precision, via the
     * custom codegen'd [[graft.functions.DotProductExpr]] (the equivalent
     * zip_with+aggregate formulation is interpreted — per-element lambda
@@ -78,6 +74,10 @@ object Similarity {
   def dot(x: Column, y: Column): Column =
     graft.functions.VectorFunctions.dotProduct(x, y)
 
+  /** Cosine similarity of two float-array columns, accumulated in double
+    * (left-to-right, same order as the oracle's list_sum — engine-exact
+    * up to final-ulp noise, which the 4-decimal rounding absorbs).
+    */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
@@ -1896,6 +1896,14 @@ object Similarity {
           .cast("array<float>").as(vecCol))
   }
 
+  /** Centered histogram features — the shared feature stage of the
+    * media near-dup family (one definition; the LSH path and its exact
+    * ground-truth twin must never drift apart).
+    */
+  private def centeredMediaFeatures(blobs: DataFrame, dims: Int): DataFrame =
+    centerVectors(Multimodal.extractFeatures(blobs, dims),
+      "doc_id", "feature")
+
   /** Multimodal near-duplicate pairs — the composition a multimodal
     * curation pipeline runs for image/frame dedup (the r8 ask):
     * [[Multimodal.extractFeatures]] histogram vectors → mean-centering
@@ -1912,14 +1920,6 @@ object Similarity {
     * default band geometry — a pair at centered cosine ≥ 0.99 is missed
     * with p < 1e-4 (Charikar; see [[hyperplaneNearDupPairs]]).
     */
-  /** Centered histogram features — the shared feature stage of the
-    * media near-dup family (one definition; the LSH path and its exact
-    * ground-truth twin must never drift apart).
-    */
-  private def centeredMediaFeatures(blobs: DataFrame, dims: Int): DataFrame =
-    centerVectors(Multimodal.extractFeatures(blobs, dims),
-      "doc_id", "feature")
-
   def mediaNearDupPairs(
       blobs: DataFrame,
       threshold: Double,

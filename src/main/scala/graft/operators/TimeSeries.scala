@@ -141,23 +141,6 @@ object TimeSeries {
     interior.select(outCols: _*).unionByName(boundary.select(outCols: _*))
   }
 
-  /** Ordered funnel: how many entities reached step 1, step 1→2, …
-    * (each step must occur at-or-after the previous one, per entity).
-    *
-    * Implementation is the single-pass stacked-window form, not the
-    * N-self-joins textbook form: a running "reached step k" flag per row
-    * (`max` over an unbounded-preceding frame), where step k counts only
-    * at rows whose type matches AND whose running step-(k-1) flag is
-    * already set. All N window expressions share ONE (entity)-keyed
-    * shuffle + sort — the N-join form would shuffle the event table N
-    * times and explode on hot entities. The per-entity reduction that
-    * follows reuses the same hash partitioning (no extra Exchange), and
-    * the final global roll-up is a single-row partial aggregate.
-    *
-    * `order` must be a deterministic total order (pass a tiebreak column
-    * alongside the timestamp) so simultaneous events resolve identically
-    * across engines and retries.
-    */
   /** Shared driver for the recursive smoothers ([[ewma]]/[[holtSmooth]]):
     * hash-partition by entity, EXTERNAL-sort within partitions by
     * (entity, order…), then stream the rows through a sequential JVM
@@ -284,6 +267,23 @@ object TimeSeries {
       emit = { case (l, b) => Seq(l, b, l + b) })
   }
 
+  /** Ordered funnel: how many entities reached step 1, step 1→2, …
+    * (each step must occur at-or-after the previous one, per entity).
+    *
+    * Implementation is the single-pass stacked-window form, not the
+    * N-self-joins textbook form: a running "reached step k" flag per row
+    * (`max` over an unbounded-preceding frame), where step k counts only
+    * at rows whose type matches AND whose running step-(k-1) flag is
+    * already set. All N window expressions share ONE (entity)-keyed
+    * shuffle + sort — the N-join form would shuffle the event table N
+    * times and explode on hot entities. The per-entity reduction that
+    * follows reuses the same hash partitioning (no extra Exchange), and
+    * the final global roll-up is a single-row partial aggregate.
+    *
+    * `order` must be a deterministic total order (pass a tiebreak column
+    * alongside the timestamp) so simultaneous events resolve identically
+    * across engines and retries.
+    */
   def funnel(df: DataFrame, entity: String, order: Seq[Column],
       typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
@@ -386,33 +386,6 @@ object TimeSeries {
       .drop("__prev", "__rn")
   }
 
-  /** Seasonal-naive anomaly flags: residual = value − value one
-    * `season` back (the simplest seasonal model — "compare to the same
-    * slot last cycle"), flagged when |residual| exceeds `k` × the mean
-    * absolute residual of the trailing `window` observations. The
-    * robust-baseline shape of a production data-quality monitor: the
-    * threshold adapts per entity, and the mean-ABSOLUTE form doesn't
-    * let one earlier spike square itself into a mask for the next one.
-    *
-    * Exactness discipline (the q151 quantized-contribution pattern):
-    * residuals quantize to `scale`-grained longs per row BEFORE the
-    * window sum, so the trailing aggregate is an exact integer sum —
-    * immune to the accumulation-order difference between engines
-    * (sliding-window sums are tree-aggregated in some engines,
-    * linear in others; integers don't care) — and the flag itself is
-    * the cross-multiplied INTEGER comparison
-    * |q|·n > k·Σ|q| (no division, no float threshold, no boundary
-    * ulps). Rows without a full `season` history carry no residual and
-    * are dropped; rows with fewer than `minObs` trailing residuals get
-    * a NULL flag (not enough evidence either way — the q184
-    * three-valued honesty).
-    *
-    * One entity-keyed shuffle; the two window passes share the
-    * partitioning (the second sorts the residual-bearing subset).
-    *
-    * @return input plus (residual_q, window_abs_sum, window_n,
-    *         is_anomaly)
-    */
   /** Retention cohort matrix — the product-analytics staple: bucket
     * every entity into the calendar period of its FIRST activity (its
     * cohort), then for each (cohort, period-offset) count how many of
@@ -546,6 +519,33 @@ object TimeSeries {
       .drop("__n", "__sum", "__sp", "__sn", "__maxabs")
   }
 
+  /** Seasonal-naive anomaly flags: residual = value − value one
+    * `season` back (the simplest seasonal model — "compare to the same
+    * slot last cycle"), flagged when |residual| exceeds `k` × the mean
+    * absolute residual of the trailing `window` observations. The
+    * robust-baseline shape of a production data-quality monitor: the
+    * threshold adapts per entity, and the mean-ABSOLUTE form doesn't
+    * let one earlier spike square itself into a mask for the next one.
+    *
+    * Exactness discipline (the q151 quantized-contribution pattern):
+    * residuals quantize to `scale`-grained longs per row BEFORE the
+    * window sum, so the trailing aggregate is an exact integer sum —
+    * immune to the accumulation-order difference between engines
+    * (sliding-window sums are tree-aggregated in some engines,
+    * linear in others; integers don't care) — and the flag itself is
+    * the cross-multiplied INTEGER comparison
+    * |q|·n > k·Σ|q| (no division, no float threshold, no boundary
+    * ulps). Rows without a full `season` history carry no residual and
+    * are dropped; rows with fewer than `minObs` trailing residuals get
+    * a NULL flag (not enough evidence either way — the q184
+    * three-valued honesty).
+    *
+    * One entity-keyed shuffle; the two window passes share the
+    * partitioning (the second sorts the residual-bearing subset).
+    *
+    * @return input plus (residual_q, window_abs_sum, window_n,
+    *         is_anomaly)
+    */
   def seasonalAnomaly(df: DataFrame, entity: String, order: Seq[Column],
       value: String, season: Int, window: Int, minObs: Int, k: Int,
       scale: Long = 10000L): DataFrame = {

@@ -105,22 +105,6 @@ object Urls {
     Dedup.exactDedup(df, urlCol, idCol,
       fingerprinter = u => urlFingerprint(u, col(idCol)))
 
-  /** Domain-blocklist screen (the C4/RefinedWeb URL-filter stage): a
-    * document is blocked when its host equals a blocklist entry OR sits
-    * under one (`a.b.example.com` is blocked by `example.com` — the
-    * registrable-domain suffix rule). Returns (idCol, host, blocked);
-    * null-host rows are never blocked (they fail URL parsing, not
-    * policy — screen them separately if the frontier shouldn't emit
-    * them).
-    *
-    * Scale shape: real blocklists run to ~10⁵–10⁶ domains, so the wrong
-    * plan is an interpreted per-row loop over the list; instead the host
-    * EXPLODES into its label-suffix chain (`www.h7.example.com` → 4
-    * suffixes — bounded by label count, ≤ ~10, independent of corpus or
-    * blocklist size) and the chain left-semi-joins the blocklist
-    * broadcast. Per-doc fan-out is the label count; the blocklist ships
-    * once per executor.
-    */
   /** The host's label-suffix chain (`www.h7.example.com` → 4 entries
     * down to `com`) — the registrable-domain membership kernel, shared
     * by [[hostBlocklistFilter]] and its streaming twin so the two
@@ -140,6 +124,22 @@ object Urls {
   def normalizeBlocklistEntry(d: String): String =
     d.trim.toLowerCase(java.util.Locale.ROOT).stripSuffix(".")
 
+  /** Domain-blocklist screen (the C4/RefinedWeb URL-filter stage): a
+    * document is blocked when its host equals a blocklist entry OR sits
+    * under one (`a.b.example.com` is blocked by `example.com` — the
+    * registrable-domain suffix rule). Returns (idCol, host, blocked);
+    * null-host rows are never blocked (they fail URL parsing, not
+    * policy — screen them separately if the frontier shouldn't emit
+    * them).
+    *
+    * Scale shape: real blocklists run to ~10⁵–10⁶ domains, so the wrong
+    * plan is an interpreted per-row loop over the list; instead the host
+    * EXPLODES into its label-suffix chain (`www.h7.example.com` → 4
+    * suffixes — bounded by label count, ≤ ~10, independent of corpus or
+    * blocklist size) and the chain left-semi-joins the blocklist
+    * broadcast. Per-doc fan-out is the label count; the blocklist ships
+    * once per executor.
+    */
   def hostBlocklistFilter(df: DataFrame, blocklist: DataFrame,
       urlCol: String = "url", idCol: String = "doc_id",
       domainCol: String = "domain"): DataFrame = {

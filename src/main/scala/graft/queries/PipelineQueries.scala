@@ -3193,11 +3193,6 @@ object PipelineQueries {
       |    min(pb) AS bench_start, max(pa) - min(pa) + 16 AS span_chars
       |  FROM g GROUP BY da, db, off, gid)""".stripMargin
 
-  /** q156/q157's shared prefix: the urlFixture strings from doc_id
-    * arithmetic, then [[graft.operators.Urls.normalizeUrl]] and
-    * [[graft.operators.Urls.hostOf]] replayed literally — `norm` ends as
-    * (doc_id, url, nurl, host).
-    */
   /** q90's full content-curation CTE chain over a pluggable `base`
     * (doc_id, text) - fingerprint canon, 8-shingle contamination vs the
     * %25-excerpt benchmark, gopher battery, quality score, repetition -
@@ -3463,6 +3458,11 @@ object PipelineQueries {
       |    '#twin' AS url
       |  FROM documents WHERE doc_id % 10 = 0""".stripMargin
 
+  /** q156/q157's shared prefix: the urlFixture strings from doc_id
+    * arithmetic, then [[graft.operators.Urls.normalizeUrl]] and
+    * [[graft.operators.Urls.hostOf]] replayed literally — `norm` ends as
+    * (doc_id, url, nurl, host).
+    */
   private val UrlNormCte = urlNormCtes(urlFixtureSql(""))
 
   /** webSpamFixture's SQL twin: the text-carrying urlFixture plus the
@@ -3644,13 +3644,6 @@ object PipelineQueries {
        |SELECT node, dg AS core_degree FROM d$rounds""".stripMargin
   }
 
-  /** DuckDB replay of [[graft.operators.Graphs.pageRank]] — the
-    * q134/q167 unrolled-round discipline: per iteration one quantized
-    * per-destination contribution CTE (integer sum), one 1-row dangling
-    * aggregate, one rank-update CTE with every literal and association
-    * order mirrored against the Spark side. `edgesCte` must yield
-    * (src, dst).
-    */
   /** DuckDB replay of [[graft.operators.Graphs.personalizedPageRank]]:
     * the q181 unrolled-round discipline with the preference vector p
     * (1/|S∩V| on seeds, 0.0 elsewhere) replacing the uniform teleport
@@ -3849,6 +3842,13 @@ object PipelineQueries {
        |SELECT node, rank FROM wr$resumeRounds""".stripMargin
   }
 
+  /** DuckDB replay of [[graft.operators.Graphs.pageRank]] — the
+    * q134/q167 unrolled-round discipline: per iteration one quantized
+    * per-destination contribution CTE (integer sum), one 1-row dangling
+    * aggregate, one rank-update CTE with every literal and association
+    * order mirrored against the Spark side. `edgesCte` must yield
+    * (src, dst).
+    */
   private def pageRankOracle(edgesCte: String, iterations: Int,
       damping: Double): String = {
     val S = "1000000000000.0::DOUBLE"
@@ -4044,14 +4044,6 @@ object PipelineQueries {
         |""".stripMargin + rounds + "\n" + audit
   }
 
-  /** Shared oracle prefix of the composed pipelines (q147/q149):
-    * q90's verdict CTEs -> kept set -> q130's shingle/closure/split
-    * CTEs restricted to kept -> train -> q121's mix CTEs over
-    * train-token shares, ending at `mixr` - one row per (doc, epoch)
-    * with (doc_id, source, n_tokens, epoch). The two compositions
-    * append their own layout arithmetic: q131+q78 (shards/packs) for
-    * q147, q148 (length-bucketed padded batches) for q149.
-    */
   /** Stages 2–3 of the composed-pipeline oracles, shared verbatim by
     * q147/q149 (curate keep-list) and q166 (curateWeb keep-list): the
     * q130 shingle/closure/split CTEs restricted to `kept`, then q121's
@@ -4228,6 +4220,14 @@ object PipelineQueries {
       |kept AS (SELECT doc_id FROM w WHERE reason IS NULL),""".stripMargin +
       "\n" + SplitMixSql
 
+  /** Shared oracle prefix of the composed pipelines (q147/q149):
+    * q90's verdict CTEs -> kept set -> q130's shingle/closure/split
+    * CTEs restricted to kept -> train -> q121's mix CTEs over
+    * train-token shares, ending at `mixr` - one row per (doc, epoch)
+    * with (doc_id, source, n_tokens, epoch). The two compositions
+    * append their own layout arithmetic: q131+q78 (shards/packs) for
+    * q147, q148 (length-bucketed padded batches) for q149.
+    */
   private val MixPrefixSql: String =
     """WITH RECURSIVE base AS (
         |  SELECT doc_id, text FROM documents

@@ -170,9 +170,6 @@ object Layout {
     planTrainingShards(df, tokenCol, idCol, shards, budget)
       .write.partitionBy("shard").mode("overwrite").parquet(path)
 
-  /** JSON-lines sink (interchange format; parquet remains the analytic
-    * format — JSON trades 5-10× size for universality).
-    */
   /** Small-files compaction — the operational fix for the
     * million-small-files problem every continuous ingest creates (each
     * micro-batch/append writes a file per task; a year of 5-minute
@@ -275,11 +272,6 @@ object Layout {
     (filesBefore, filesAfter, totalBytes)
   }
 
-  /** Driver-side file inventory of a parquet root: one (relative dir,
-    * file count, bytes) row per directory — metadata only (~100 bytes
-    * per file), never data. Shared by [[compactParquet]] and
-    * [[compactParquetFlat]].
-    */
   /** One [[zorderCompactN]] pass: what was touched and what was not.
     * `rewrittenBytes` is the bytes that went through the Spark
     * decode→sort→encode rewrite (the operator's real cost);
@@ -452,6 +444,11 @@ object Layout {
     acc.toSeq
   }
 
+  /** Driver-side file inventory of a parquet root: one (relative dir,
+    * file count, bytes) row per directory — metadata only (~100 bytes
+    * per file), never data. Shared by [[compactParquet]] and
+    * [[compactParquetFlat]].
+    */
   private def inventory(spark: org.apache.spark.sql.SparkSession,
       p: String): Seq[(String, Long, Long)] = {
     val root = new org.apache.hadoop.fs.Path(p)
@@ -514,6 +511,9 @@ object Layout {
     (filesBefore, filesAfter, totalBytes)
   }
 
+  /** JSON-lines sink (interchange format; parquet remains the analytic
+    * format — JSON trades 5-10× size for universality).
+    */
   def writeJsonLines(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
 

@@ -258,8 +258,8 @@ object Streaming {
     * the two constraints Spark requires to plan a stream–stream join
     * with finite state. Without the time bound the join would buffer
     * both streams forever.
-    */
-  /** @param joinType "inner", or "left_outer" to ALSO emit unattributed
+    *
+    * @param joinType "inner", or "left_outer" to ALSO emit unattributed
     *                  clicks (null purchase columns) — outer rows flush
     *                  only once the watermark proves no matching purchase
     *                  can still arrive, which is why the watermark is

@@ -1,5 +1,11 @@
 package graft.operators
 
+import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -253,6 +259,18 @@ class GraphsSpec extends SparkSpec {
     r
   }
 
+  /** Runs `body`, which must throw, and asserts that `expected` occurs in
+    * the message of the exception or of one of its causes (a
+    * `raise_error` inside a job reaches the driver wrapped).
+    */
+  private def assertRaises(expected: String)(body: => Any): Unit = {
+    val ex = intercept[Exception](body)
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains(expected)),
+      s"no message names '$expected': ${msgs.mkString(" / ")}")
+  }
+
   test("weightedPersonalizedPageRank ≡ replay; unreachable zero; guards") {
     // seed a: a splits 3:1 to b and c, b feeds c, c dangles back to a's
     // preference; island x->y is unreachable from the seed
@@ -280,19 +298,23 @@ class GraphsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Graphs.weightedPersonalizedPageRank(wg, Seq("zz").toDF("node"), 2)
     }
-    intercept[Exception] {
+    // each raise names the entry point and the offending weight
+    assertRaises("weightedPersonalizedPageRank requires positive " +
+        "weights; got 0") {
       Graphs.weightedPersonalizedPageRank(
         Seq(("a", "b", 0L)).toDF("src", "dst", "w"),
         Seq("a").toDF("node"), 2)
     }
-    intercept[Exception] {
+    assertRaises("weightedPersonalizedPageRank: weight not losslessly " +
+        "castable to long (quantize first): 0.9") {
       Graphs.weightedPersonalizedPageRank(
         Seq(("a", "b", 0.9)).toDF("src", "dst", "w"),
         Seq("a").toDF("node"), 2)
     }
     // masked-negative parallel edge raises (ADVICE r18; see the
     // weightedPageRank case)
-    intercept[Exception] {
+    assertRaises("weightedPersonalizedPageRank requires positive " +
+        "weights; got -3") {
       Graphs.weightedPersonalizedPageRank(
         Seq(("a", "b", 5L), ("a", "b", -3L)).toDF("src", "dst", "w"),
         Seq("a").toDF("node"), 2)
@@ -318,18 +340,19 @@ class GraphsSpec extends SparkSpec {
       .as[(String, Double)].collect().toMap == got,
       "parallel-edge weights must collapse by summing")
     // guards: lossy cast, non-positive weight, bad params
-    intercept[Exception] {
+    assertRaises("weightedPageRank: weight not losslessly castable to " +
+        "long (quantize first): 0.9") {
       Graphs.weightedPageRank(
         Seq(("a", "b", 0.9)).toDF("src", "dst", "w"), 2)
     }
-    intercept[Exception] {
+    assertRaises("weightedPageRank requires positive weights; got 0") {
       Graphs.weightedPageRank(
         Seq(("a", "b", 0L)).toDF("src", "dst", "w"), 2)
     }
     // ADVICE r18: a negative edge MASKED by a positive parallel edge
     // (+5 and -3 sum to +2) must still raise — positivity is a
     // per-edge contract, checked BEFORE the multigraph collapse
-    intercept[Exception] {
+    assertRaises("weightedPageRank requires positive weights; got -3") {
       Graphs.weightedPageRank(
         Seq(("a", "b", 5L), ("a", "b", -3L), ("b", "c", 1L))
           .toDF("src", "dst", "w"), 2)
@@ -731,6 +754,95 @@ class GraphsSpec extends SparkSpec {
     assert(got == Map(1L -> 0L))
     intercept[IllegalArgumentException] {
       Graphs.shortestHops(edges, Seq(1L).toDF("node"), -1)
+    }
+  }
+
+  /** The six round-loop entry points on the fixture graphs, by name,
+    * as functions of the iteration count.
+    */
+  private def roundLoops: Seq[(String, Int => DataFrame)] = {
+    val wg = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L))
+      .toDF("src", "dst", "w")
+    val stored = Seq(("a", 0.4), ("b", 0.3), ("c", 0.2), ("d", 0.1))
+      .toDF("node", "rank")
+    Seq(
+      "pageRank" -> (k => Graphs.pageRank(g, k)),
+      "resumePageRank" -> (k => Graphs.resumePageRank(stored, g, k)),
+      "weightedPageRank" -> (k => Graphs.weightedPageRank(wg, k)),
+      "personalizedPageRank" ->
+        (k => Graphs.personalizedPageRank(g, Seq("c").toDF("node"), k)),
+      "weightedPersonalizedPageRank" -> (k =>
+        Graphs.weightedPersonalizedPageRank(wg, Seq("a").toDF("node"), k)),
+      "hits" -> (k => Graphs.hits(g, k)))
+  }
+
+  /** Spark jobs started while `body` runs. A one-task fence job before
+    * and after brackets the count: the listener bus delivers events in
+    * order, so once the closing fence arrives every job of `body` has.
+    */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val fences = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.fence")) match {
+          case Some(tag: String) => fences.put(tag)
+          case _ => jobs.incrementAndGet()
+        }
+    }
+    def fence(tag: String): Unit = {
+      sc.setLocalProperty("graft.fence", tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      assert(fences.poll(60, TimeUnit.SECONDS) == tag, s"fence $tag lost")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open")
+      jobs.set(0)
+      body
+      fence("close")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("round loops: Spark jobs per call pinned at 2 and 5 iterations") {
+    // Measured on the fixtures with the local[4] test session. Each
+    // round stages its frames through Persist.round, and under adaptive
+    // execution one staging action runs as several jobs (one per
+    // shuffle stage and broadcast), so the pins are jobs, not actions.
+    // A per-round count or collect shows up as a moved pin.
+    val pinned = Map(
+      "pageRank" -> ((23, 47)),
+      "resumePageRank" -> ((28, 52)),
+      "weightedPageRank" -> ((28, 55)),
+      "personalizedPageRank" -> ((27, 51)),
+      "weightedPersonalizedPageRank" -> ((32, 59)),
+      "hits" -> ((38, 92)))
+    val got = roundLoops.map { case (name, run) =>
+      name -> ((jobsDuring(run(2)), jobsDuring(run(5))))
+    }.toMap
+    assert(got == pinned, s"jobs per call moved: $got")
+  }
+
+  test("round loops on the reliable checkpoint backend: bit-identical " +
+      "to the local backend, staged files under the checkpoint dir") {
+    def bits(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).toSet
+    val local = roundLoops.map { case (name, run) => name -> bits(run(3)) }
+    val dir = Files.createTempDirectory("graft_graphs_ckpt")
+    try {
+      spark.conf.set(Persist.CheckpointDirKey, dir.toString)
+      roundLoops.zip(local).foreach { case ((name, run), (_, want)) =>
+        assert(bits(run(3)) == want, s"$name moved on the reliable backend")
+      }
+      val staged = Files.walk(dir).filter(Files.isRegularFile(_)).count()
+      assert(staged > 0L, s"no checkpoint files under $dir")
+    } finally {
+      spark.conf.unset(Persist.CheckpointDirKey)
     }
   }
 }
