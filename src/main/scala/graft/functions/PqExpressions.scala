@@ -1,10 +1,13 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
@@ -29,6 +32,10 @@ import org.apache.spark.sql.types._
   * and the argmin compares via `java.lang.Double.compare`, i.e. the
   * (distance, cid) struct ordering min_by used (NaN greatest, ties to
   * the lowest cid).
+  *
+  * The ADC probes score with one more kernel, [[PqAdcScanExpr]]: a
+  * per-row sum over driver-built lookup tables that ship as a
+  * broadcast rather than as plan metadata.
   */
 object PqFunctions {
 
@@ -73,6 +80,18 @@ object PqFunctions {
       centroids: Seq[Seq[Double]]): Column =
     ExpressionUtils.column(NearestCentroidExpr(
       ExpressionUtils.expression(vec), cids, centroids))
+
+  /** ADC scan of one PQ-coded row against every query that probes it:
+    * array<struct<query_id, sim>> (see [[PqAdcScanExpr.scan]]). `cid`
+    * (long) selects the row's coarse list; pass None for flat ADC, whose
+    * tables carry no coarse part. The tables are a driver-made broadcast,
+    * so they reach each executor once, not inside every task.
+    */
+  private[graft] def pqAdcScan(codes: Column, cid: Option[Column],
+      tables: Broadcast[PqAdcTables], queryIdType: DataType): Column =
+    ExpressionUtils.column(PqAdcScanExpr(
+      (Seq(codes) ++ cid).map(ExpressionUtils.expression), tables,
+      queryIdType))
 }
 
 object PqCodesExpr {
@@ -315,4 +334,181 @@ case class NearestCentroidExpr(child: Expression, cids: Seq[Long],
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** Driver-built asymmetric-distance lookup tables (Jégou, Douze, Schmid,
+  * TPAMI 2011 §IV–V, inner-product form) for [[PqAdcScanExpr]]. Indexing
+  * is flat: `qd((q·M + m)·K + code)`, `cwn(m·K + code)`.
+  *
+  * @param queryIds internal values of the query id column, one per query
+  * @param qn       ‖q‖ per query
+  * @param qd       dot(q_m, codeword(m, code)): the Q×M×K query table
+  * @param cwn      ‖codeword(m, code)‖²: the M×K norm table
+  * @param coarse   the IVF-PQ probe's centroid part; null for flat ADC
+  */
+private[graft] final class PqAdcTables(
+    val queryIds: Array[Any],
+    val qn: Array[Double],
+    val numSubspaces: Int,
+    val codebookSize: Int,
+    val qd: Array[Double],
+    val cwn: Array[Double],
+    val coarse: PqAdcCoarse) extends Serializable {
+
+  /** Flat ADC: every query scores every row. */
+  @transient private[functions] lazy val allQueries: Array[Int] =
+    Array.range(0, queryIds.length)
+}
+
+/** The coarse-quantizer part of [[PqAdcTables]].
+  *
+  * @param cids    the index's centroid ids, ascending
+  * @param cn0     ‖c‖² per centroid
+  * @param cc      dot(c_m, codeword(m, code)): the C×M×K centroid table,
+  *                indexed `(c·M + m)·K + code`
+  * @param probers per centroid, the indices of the queries probing it
+  * @param qc0     per centroid, dot(q, c) aligned with `probers`
+  */
+private[graft] final class PqAdcCoarse(
+    val cids: Array[Long],
+    val cn0: Array[Double],
+    val cc: Array[Double],
+    val probers: Array[Array[Int]],
+    val qc0: Array[Array[Double]]) extends Serializable
+
+private[graft] object PqAdcScanExpr {
+
+  private val empty = new GenericArrayData(Array.empty[Any])
+
+  /** Scores one coded row — shared by eval and generated code (static
+    * forwarder). Each sum starts at 0.0 and adds its terms in m order,
+    * the order the per-group `sum` aggregates of the join form saw them,
+    * so every sum is the same IEEE value:
+    *
+    *  - flat: n2 = Σ cwn; sim = Σ qd / (qn·sqrt(n2));
+    *  - coarse: n2 = cn0 + 2.0·Σ cc + Σ cwn;
+    *    sim = (qc0 + Σ qd) / (qn·sqrt(n2)).
+    *
+    * Rows with n2 ≤ 0 (Spark's double ordering: NaN passes) emit nothing;
+    * a zero denominator fails as ANSI division does. Codes must be M
+    * non-null ints in [0, K): a short, long or out-of-range code array
+    * would otherwise score against a truncated reconstruction.
+    */
+  def scan(t: PqAdcTables, codes: ArrayData, cid: Long): ArrayData = {
+    val m = t.numSubspaces
+    val k = t.codebookSize
+    if (codes.numElements() != m) {
+      throw new IllegalArgumentException(
+        s"pq_adc_scan: expected $m codes, got ${codes.numElements()}")
+    }
+    val cs = new Array[Int](m)
+    var j = 0
+    while (j < m) {
+      if (codes.isNullAt(j)) {
+        throw new IllegalArgumentException(s"pq_adc_scan: null code at $j")
+      }
+      val code = codes.getInt(j)
+      if (code < 0 || code >= k) {
+        throw new IllegalArgumentException(
+          s"pq_adc_scan: code $code at $j outside [0, $k)")
+      }
+      cs(j) = code
+      j += 1
+    }
+    val c = t.coarse
+    val ci = if (c != null) java.util.Arrays.binarySearch(c.cids, cid) else -1
+    val qs =
+      if (c == null) t.allQueries else if (ci < 0) null else c.probers(ci)
+    if (qs == null || qs.isEmpty) return empty
+    var rn = 0.0
+    j = 0
+    while (j < m) { rn += t.cwn(j * k + cs(j)); j += 1 }
+    val n2 = if (c != null) {
+      var cross = 0.0
+      val base = ci * m
+      j = 0
+      while (j < m) { cross += c.cc((base + j) * k + cs(j)); j += 1 }
+      c.cn0(ci) + 2.0 * cross + rn
+    } else rn
+    if (SQLOrderingUtil.compareDoubles(n2, 0.0) <= 0) return empty
+    val sn = math.sqrt(n2)
+    val out = new Array[Any](qs.length)
+    var p = 0
+    while (p < qs.length) {
+      val q = qs(p)
+      var num = 0.0
+      val base = q * m
+      j = 0
+      while (j < m) { num += t.qd((base + j) * k + cs(j)); j += 1 }
+      val den = t.qn(q) * sn
+      if (den == 0.0) {
+        throw new ArithmeticException(
+          "pq_adc_scan: zero cosine denominator (ANSI division by zero)")
+      }
+      val top = if (c != null) c.qc0(ci)(p) + num else num
+      out(p) = new GenericInternalRow(Array[Any](t.queryIds(q), top / den))
+      p += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+/** See [[PqFunctions.pqAdcScan]]. Children: the codes (array<int>) and,
+  * for a coarse-quantized index, the row's cid (long). The broadcast
+  * handle is the tables' identity: one probe call makes one broadcast,
+  * so two references to the same scan compare equal.
+  */
+private[graft] case class PqAdcScanExpr(children: Seq[Expression],
+    tables: Broadcast[PqAdcTables], queryIdType: DataType)
+    extends Expression {
+
+  require(children.length == 1 || children.length == 2,
+    "pq_adc_scan takes codes and an optional cid")
+
+  override def nullable: Boolean = true
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("query_id", queryIdType, nullable = false),
+    StructField("sim", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "pq_adc_scan"
+  override def checkInputDataTypes(): TypeCheckResult =
+    TypeChecks.both(children.head.dataType match {
+      case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
+      case o => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires array<int> codes, got ${o.simpleString}")
+    }, children.drop(1).map(_.dataType) match {
+      case Seq() | Seq(LongType) => TypeCheckResult.TypeCheckSuccess
+      case o => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a bigint cid, got ${o.head.simpleString}")
+    })
+
+  override def eval(input: InternalRow): Any = {
+    val codes = children.head.eval(input)
+    val cid = if (children.length == 2) children(1).eval(input) else 0L
+    if (codes == null || cid == null) null
+    else PqAdcScanExpr.scan(tables.value, codes.asInstanceOf[ArrayData],
+      cid.asInstanceOf[Long])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("adcBroadcast", tables,
+      classOf[Broadcast[_]].getName)
+    val cls = classOf[PqAdcTables].getName
+    // the broadcast value is fetched once per generated-class instance
+    val t = ctx.addMutableState(cls, "adcTables",
+      v => s"$v = ($cls) $bcRef.value();")
+    val gens = children.map(_.genCode(ctx))
+    val cid = if (gens.length == 2) gens(1).value.toString else "0L"
+    ev.copy(code = code"""
+      |${gens.map(_.code).mkString("\n")}
+      |boolean ${ev.isNull} = ${gens.map(_.isNull.toString).mkString(" || ")};
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  ${ev.value} = graft.functions.PqAdcScanExpr.scan($t,
+      |    ${gens.head.value}, $cid);
+      |}""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
 }

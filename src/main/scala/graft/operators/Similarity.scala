@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** A built IVF index — the build-once half of the build/probe split
   * ([[Similarity.buildIvfIndex]] / [[Similarity.probeIvfQuantized]]).
@@ -30,14 +33,15 @@ final case class IvfIndex(centroids: DataFrame, lists: DataFrame)
   * scoring) each supplied half of.
   *
   *  - `centroids`: (cid, __cv) float coarse-quantizer centroids —
-  *    metadata-sized, broadcast at probe time.
+  *    metadata-sized, collected to the driver at probe time.
   *  - `codebooks`: (m, cid, __cv) per-subspace PQ codebooks trained on
   *    RESIDUALS (vector − its coarse centroid) — M×K codewords,
-  *    metadata-sized, broadcast at probe time.
+  *    metadata-sized, collected to the driver at probe time.
   *  - `lists`: (cid, neighbor_id, codes) — M small ints per vector,
   *    the 32×-class compressed inverted-list entry. No floats, no
   *    norms: every scoring quantity reconstructs from the two
-  *    metadata frames.
+  *    metadata frames, whose lookup tables the probe builds on the
+  *    driver and ships to the executors as one broadcast.
   *
   * Persist with [[Similarity.writeIvfPqIndex]] (lists hive-partitioned
   * by `cid` → probe-time partition pruning) and reopen with
@@ -107,16 +111,28 @@ object Similarity {
     * which sorts first under the desc ordering and wins every max_by
     * assignment — all inverted lists collapse into one and the "index"
     * silently degenerates to a brute-force scan).
+    *
+    * The init is collected once into a local frame (numCentroids rows —
+    * metadata, like every Lloyd sweep's output): left lazy, each consumer
+    * (the assignment kernel, the residual join, the index's centroid
+    * frame) re-ran the corpus scan and its top-N.
     */
   private def centroidInit(emb: DataFrame, numCentroids: Int,
       kmeansIterations: Int, idCol: String, vecCol: String): DataFrame = {
     val nonZero = emb.filter(dot(col(vecCol), col(vecCol)) > 0)
-    val init = nonZero.orderBy(col(idCol).asc).limit(numCentroids)
-      .select(col(idCol).as("cid"), col(vecCol).as("__cv"))
+    val init = localFrame(nonZero.orderBy(col(idCol).asc).limit(numCentroids)
+      .select(col(idCol).as("cid"), col(vecCol).as("__cv")))
     if (kmeansIterations > 0)
       kmeansCentroids(nonZero, init, kmeansIterations, idCol, vecCol)
     else init
   }
+
+  /** A metadata-sized frame collected into a LocalRelation: later plans
+    * read the driver-held rows and re-run none of its lineage.
+    */
+  private def localFrame(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Exact top-k neighbors for each query vector (brute force).
     *
@@ -494,15 +510,16 @@ object Similarity {
       s"dim $dim must divide into numSubspaces $numSubspaces")
     require(codebookSize >= 2, s"codebookSize must be >= 2")
     val subDim = dim / numSubspaces
-    val spark = emb.sparkSession
-    def materialize(df: DataFrame): DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
     val subs = subVectors(emb, idCol, vecCol, numSubspaces, subDim)
-    val wInit = Window.orderBy(col("nid").asc)
-    val initIds = emb.select(col(idCol).as("nid"))
+    // the K lowest ids, numbered 0..K-1 on the driver; the join through
+    // `subs` keeps the ragged-vector check on the whole corpus
+    val lowest = emb.select(col(idCol).as("nid"))
       .orderBy(col("nid").asc).limit(codebookSize)
-      .withColumn("cid", row_number().over(wInit) - 1)
-    var cents = materialize(subs.join(broadcast(initIds), Seq("nid"))
+    val initIds = emb.sparkSession.createDataFrame(
+      java.util.Arrays.asList(lowest.collect().zipWithIndex.map {
+        case (r, i) => Row(r.get(0), i) }: _*),
+      lowest.schema.add("cid", IntegerType, nullable = false))
+    var cents = localFrame(subs.join(broadcast(initIds), Seq("nid"))
       .select(col("m"), col("cid"), col("__v").as("__cv")))
     for (_ <- 1 to iterations) {
       // per-row argmin through the codegen'd kernel against the
@@ -523,7 +540,7 @@ object Similarity {
         .groupBy(col("m"), col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
           s => s.getField("mu")).as("__nv"))
-      cents = materialize(cents.join(means, Seq("m", "cid"), "left")
+      cents = localFrame(cents.join(means, Seq("m", "cid"), "left")
         .select(col("m"), col("cid"),
           coalesce(col("__nv"), col("__cv")).as("__cv")))
     }
@@ -547,7 +564,8 @@ object Similarity {
       dim: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val (numSubspaces, subDim) = pqShape(codebooks)
+    val cbArr = localCodebookArray(codebooks)
+    val (numSubspaces, subDim) = (cbArr.length, cbArr(0)(0).length)
     require(numSubspaces * subDim == dim,
       s"codebooks are ${numSubspaces}×$subDim, vectors dim $dim")
     // one shuffle-free scan (round 21): the whole codes array is
@@ -559,7 +577,6 @@ object Similarity {
     // tripped: an upstream OPQ rotation re-evaluated per lambda
     // reference). Same ragged-vector fail-loud, same distance
     // arithmetic and tie-break, so every code is unchanged.
-    val cbArr = localCodebookArray(codebooks)
     emb.select(col(idCol),
       graft.functions.PqFunctions.pqCodes(col(vecCol), cbArr).as("codes"))
   }
@@ -573,16 +590,23 @@ object Similarity {
     *   ‖x̂‖²      = Σ_m ‖codeword(m, codes_m)‖²   (subspaces orthogonal)
     *
     * so sim = reconstructed cosine, computed WITHOUT touching a float
-    * corpus vector. The distance table (query × m × cid: partial dot +
-    * codeword norm² — queries × M × K rows, metadata by the broadcast-
-    * query contract) broadcasts onto one pass over the exploded codes;
-    * per-query bounded-heap top-k as every sibling. Zero-norm guards on
-    * both sides (ADVICE r8: NaN sorts first in the heap); zero-norm
-    * RECONSTRUCTIONS are likewise excluded — a vector whose every
-    * codeword is zero has no direction.
+    * corpus vector. Zero-norm guards on both sides (ADVICE r8: NaN sorts
+    * first in the heap); zero-norm RECONSTRUCTIONS are likewise
+    * excluded — a vector whose every codeword is zero has no direction.
+    *
+    * Scale shape: the queries (small by the broadcast-query contract)
+    * and the codebooks are collected once, and the driver builds the
+    * Q×M×K partial-dot table and the M×K codeword-norm table. One
+    * broadcast ships them to each executor, and one pass over the codes
+    * scores every (row, query) pair with the codegen'd
+    * [[graft.functions.PqAdcScanExpr]] kernel: no exploded codes, no
+    * table join, no per-pair aggregate. The per-query bounded-heap top-k
+    * follows, as for every sibling. Each query id must appear once;
+    * a repeated id fails naming it.
     *
     * At corpus scale this composes exactly like [[quantizedTopK]]: IVF
-    * lists hold codes, the probe runs ADC inside probed lists only.
+    * lists hold codes, the probe runs ADC inside probed lists only
+    * ([[probeIvfPq]]).
     */
   def pqAdcTopK(
       codes: DataFrame,
@@ -591,29 +615,20 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      codesCol: String = "codes"): DataFrame = {
-    val (numSubspaces, subDim) = pqShape(codebooks)
-    val qsubs = subVectors(
-      queries.filter(dot(col(vecCol), col(vecCol)) > 0),
-      idCol, vecCol, numSubspaces, subDim)
-    val qnorms = queries.select(col(idCol).as("query_id"),
-      sqrt(dot(col(vecCol), col(vecCol))).as("__qn"))
-    val dt = qsubs.join(codebooks, Seq("m"))
-      .select(col("nid").as("query_id"), col("m"),
-        col("cid").as("code"),
-        dot(col("__v"), col("__cv")).as("__pd"),
-        dot(col("__cv"), col("__cv")).as("__cn"))
-    val scored = codes
-      .select(col(idCol).as("neighbor_id"),
-        posexplode(col(codesCol)).as(Seq("m", "code")))
-      .join(broadcast(dt), Seq("m", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy(col("neighbor_id"), col("query_id"))
-      .agg(sum(col("__pd")).as("__num"), sum(col("__cn")).as("__n2"))
-      .filter(col("__n2") > 0)
-      .join(broadcast(qnorms), Seq("query_id"))
-      .withColumn("sim", col("__num") / (col("__qn") * sqrt(col("__n2"))))
-    topKEmit(scored, k)
+      codesCol: String = "codes"): DataFrame =
+    topKEmit(pqAdcScores(codes, queries, codebooks, idCol, vecCol,
+      codesCol), k)
+
+  /** [[pqAdcTopK]]'s candidate scores before the top-k: (query_id,
+    * neighbor_id, sim), unrounded.
+    */
+  private[operators] def pqAdcScores(codes: DataFrame, queries: DataFrame,
+      codebooks: DataFrame, idCol: String, vecCol: String,
+      codesCol: String): DataFrame = {
+    val cb = localCodebookArray(codebooks)
+    val q = adcQueries(queries, cb, idCol, vecCol, "pqAdcTopK")
+    adcScan(codes.select(col(idCol).as("neighbor_id"), col(codesCol)),
+      col(codesCol), None, adcTables(q, cb, None), q.idType)
   }
 
   /** ADC shortlist + exact float re-rank (Jégou §VII, the "IVFADC+R"
@@ -673,13 +688,12 @@ object Similarity {
       idCol, vecCol)
   }
 
-  /** (numSubspaces, subDim) off a codebook frame — both metadata-sized
-    * aggregates on the already-local codebooks.
+  /** (numSubspaces, subDim) off a codebook frame, read from
+    * [[localCodebookArray]]: no job on an already-local codebook frame.
     */
   private def pqShape(codebooks: DataFrame): (Int, Int) = {
-    val row = codebooks.agg(max(col("m")), max(size(col("__cv"))))
-      .collect()(0)
-    (row.getInt(0) + 1, row.getInt(1))
+    val cb = localCodebookArray(codebooks)
+    (cb.length, cb(0)(0).length)
   }
 
   // ---------------------------------------------- local-literal argmin
@@ -695,7 +709,11 @@ object Similarity {
   // the same dot kernel) and the (distance, cid) struct ordering are
   // byte-for-byte the ones min_by compared, so every assignment — and
   // therefore every code, reconstruction, and recall artifact — is
-  // unchanged.
+  // unchanged. The ADC probes ([[pqAdcTopK]], [[probeIvfPq]]) take the
+  // same move from assignment to scoring: their lookup tables are built
+  // on the driver from these arrays (see the driver-side ADC block), and
+  // the codebook shape is read off them, so a local codebook frame costs
+  // no job.
 
   /** Codebook frame (m, cid, __cv) → driver-side nested array with
     * cbs(m)(cid) = codeword (the [[graft.functions.PqFunctions]] kernel
@@ -713,6 +731,8 @@ object Similarity {
     rows.foreach(r => arr(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
     arr.foreach(_.foreach(v => require(v != null,
       "pq: codebook frame is missing (m, cid) entries")))
+    require(arr.forall(_.forall(_.length == arr(0)(0).length)),
+      "pq: codewords of unequal length in the codebook frame")
     arr
   }
 
@@ -741,10 +761,20 @@ object Similarity {
     * the frame's cid type so downstream schemas are unchanged.
     */
   private def nearestCentroid(cents: DataFrame, v: Column): Column = {
+    val (cids, cvs) = localCentroids(cents)
+    graft.functions.PqFunctions.nearestCentroidId(v, cids.toSeq,
+      cvs.toSeq.map(_.toSeq)).cast(cents.schema("cid").dataType)
+  }
+
+  /** Centroid frame (cid, __cv) → driver-side (cids as longs, centroids
+    * widened to double), in frame order. Cids are vector ids, integral
+    * by construction; the float→double widening is exact.
+    */
+  private def localCentroids(cents: DataFrame)
+      : (Array[Long], Array[Array[Double]]) = {
     val fields = cents.schema.fieldNames
     require(fields.contains("cid") && fields.contains("__cv"),
       s"ivf: centroid frame must carry (cid, __cv), got ${fields.toSeq}")
-    val cidType = cents.schema("cid").dataType
     val rows = cents.select(col("cid"), col("__cv").cast("array<double>"))
       .collect()
     require(rows.nonEmpty, "ivf: empty centroid frame")
@@ -757,10 +787,11 @@ object Similarity {
       case b: java.lang.Byte => b.longValue
       case o => throw new IllegalArgumentException(
         s"ivf: integral cid required, got ${o.getClass.getName}")
-    }).toSeq
-    val cvs = rows.map(r => r.getSeq[Double](1)).toSeq
-    graft.functions.PqFunctions.nearestCentroidId(v, cids, cvs)
-      .cast(cidType)
+    })
+    val cvs = rows.map(r => Option(r.getSeq[Double](1)).map(_.toArray)
+      .getOrElse(throw new IllegalArgumentException(
+        s"ivf: null vector for centroid ${r.get(0)}")))
+    (cids, cvs)
   }
 
   /** Distance-to-centroid outlier scoring — the embedding-space health
@@ -846,10 +877,8 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m")).as("__nv"))
-      val next = cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("__nv"), col("__cv")).as("__cv"))
-      cents = emb.sparkSession.createDataFrame(
-        java.util.Arrays.asList(next.collect(): _*), next.schema)
+      cents = localFrame(cents.join(means, Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("__nv"), col("__cv")).as("__cv")))
     }
     cents
   }
@@ -1404,13 +1433,22 @@ object Similarity {
     *   dot(q, x̂) = dot(q, c) + Σ_m dot(q_m, cw_m)
     *   ‖x̂‖²      = ‖c‖² + 2·Σ_m dot(c_m, cw_m) + Σ_m ‖cw_m‖²
     *
-    * — the cosine/inner-product form needs NO query-residual tables:
-    * dot(q, c) rides on the probe ranking pass, the per-(query, m,
-    * code) and per-(cid, m, code) lookup tables are Q×M×K and C×M×K
-    * rows (metadata by the broadcast-query contract), and the hot loop
-    * is one pass over the probed lists' exploded codes joined against
-    * broadcasts. Zero-norm queries and zero-norm reconstructions are
-    * excluded ([[pqAdcTopK]]'s contract — NaN would heap-rank first).
+    * — the cosine/inner-product form needs NO query-residual tables.
+    * Zero-norm queries and zero-norm reconstructions are excluded
+    * ([[pqAdcTopK]]'s contract — NaN would heap-rank first).
+    *
+    * Scale shape: everything but the lists is metadata. The queries
+    * (small by the broadcast-query contract), centroids and codebooks
+    * are collected once; the driver ranks each query's probes (cosine
+    * desc under Spark's double ordering, ties to the lowest cid), and
+    * builds dot(q, c), ‖q‖, ‖c‖², the Q×M×K query table and the C×M×K
+    * centroid table. One broadcast ships them to each executor, and one
+    * pass over the probed lists scores each entry against the queries
+    * probing its list with the codegen'd [[graft.functions.PqAdcScanExpr]]
+    * kernel, feeding the per-query top-k. The probe itself runs no Spark
+    * job beyond collecting the queries (and a stored index's small
+    * centroid/codebook files). Each query id must appear once; a
+    * repeated id fails naming it.
     *
     * Recall loses the IVF probe miss AND the PQ ranking noise —
     * approximate by construction, rows-only at the driver gate; the
@@ -1424,67 +1462,183 @@ object Similarity {
       k: Int,
       nprobe: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val (numSubspaces, subDim) = pqShape(index.codebooks)
-    val cb = broadcast(index.codebooks)
-    val cents = broadcast(index.centroids)
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qs").desc, col("cid").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .filter(dot(col("__qv"), col("__qv")) > 0)
-      .join(cents)
-      .withColumn("__qs", cosine(col("__qv"), col("__cv")))
-      .withColumn("__pr", row_number().over(wq))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("__qv"), col("cid"),
-        dot(col("__qv"), col("__cv")).as("__qc0"),
-        sqrt(dot(col("__qv"), col("__qv"))).as("__qn"))
-      .transform(Persist.round)
+      vecCol: String = "embedding"): DataFrame =
+    topKEmit(probeIvfPqScores(index, queries, nprobe, idCol, vecCol), k)
+
+  /** [[probeIvfPq]]'s candidate scores before the top-k: (query_id,
+    * neighbor_id, sim), unrounded.
+    */
+  private[operators] def probeIvfPqScores(index: IvfPqIndex,
+      queries: DataFrame, nprobe: Int, idCol: String,
+      vecCol: String): DataFrame = {
+    val cb = localCodebookArray(index.codebooks)
+    val q = adcQueries(queries, cb, idCol, vecCol, "probeIvfPq")
+    val probe = coarseProbe(q, index.centroids, cb, nprobe)
     // static partition pruning, in the lists' own cid type (the
     // probeIvfQuantized discipline: casting the literal side keeps a
     // hive-narrowed cid column prunable)
     val cidType = index.lists.schema("cid").dataType
-    val probedCids = probes.select(col("cid").cast(cidType)).distinct()
-      .collect().map(_.get(0)).toSeq
-    val lists = index.lists.filter(col("cid").isin(probedCids: _*))
-    // per-(query, m, code) partial dots — Q×M×K rows, broadcast
-    val qd = subVectors(
-        probes.select(col("query_id"), col("__qv")).distinct(),
-        "query_id", "__qv", numSubspaces, subDim)
-      .join(cb, Seq("m"))
-      .select(col("nid").as("query_id"), col("m"),
-        col("cid").as("code"), dot(col("__v"), col("__cv")).as("__qd"))
-    // per-(cid, m, code) centroid×codeword terms — C×M×K rows, broadcast
-    val ct = subVectors(
-        index.centroids.select(col("cid").as("__pc"), col("__cv")),
-        "__pc", "__cv", numSubspaces, subDim)
-      .join(cb, Seq("m"))
-      .select(col("nid").as("cid"), col("m"), col("cid").as("code"),
-        dot(col("__v"), col("__cv")).as("__cc"),
-        dot(col("__cv"), col("__cv")).as("__cwn"))
-    val cn0 = index.centroids
-      .select(col("cid"), dot(col("__cv"), col("__cv")).as("__cn0"))
-    val scored = lists
-      .select(col("cid"), col("neighbor_id"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-      .join(broadcast(probes.select(col("query_id"), col("cid"))),
-        Seq("cid"))
+    val probed = probe.cids.indices.filter(probe.probers(_).nonEmpty)
+      .map(c => lit(probe.cids(c)).cast(cidType))
+    val lists = index.lists.filter(col("cid").isin(probed: _*))
+      .select(col("neighbor_id"), col("codes"), col("cid"))
+    adcScan(lists, col("codes"), Some(col("cid")),
+      adcTables(q, cb, Some(probe)), q.idType)
+  }
+
+  // ------------------------------------------------ driver-side ADC tables
+  // The ADC lookup tables (Q×M×K, C×M×K) are metadata-sized by the
+  // broadcast-query contract, so they are built on the driver: as Spark
+  // joins plus a (query, neighbor) sum shuffle they cost a dozen jobs
+  // per probe that plan and ship metadata, not data. Every table entry
+  // uses the [[dot]] kernel's arithmetic (left-to-right double sums over
+  // float-widened values) and the scan kernel sums in m order, so the
+  // scores are the IEEE values the join form's per-group sums produced
+  // (PqAdcSpec keeps that form as its reference).
+
+  /** An ADC probe's query set on the driver: ids as Catalyst values of
+    * `idType`, vectors widened to double, and their norms ‖q‖.
+    */
+  private final case class AdcQueries(idType: DataType, ids: Array[Any],
+      vecs: Array[Array[Double]], norms: Array[Double])
+
+  /** Collect the (small, by contract) query set once. Rows with a null
+    * id or vector, or a zero norm, drop (no direction; `> 0` under
+    * Spark's double ordering, so a NaN norm stays as it did in the SQL
+    * filter). Each id must appear once — a repeated id would be scored
+    * with its per-subspace terms summed twice, a plausible wrong score
+    * — and a kept vector must be M·subDim long.
+    */
+  private def adcQueries(queries: DataFrame, cb: Array[Array[Array[Double]]],
+      idCol: String, vecCol: String, caller: String): AdcQueries = {
+    val idType = queries.schema(idCol).dataType
+    val rows = queries.select(col(idCol), col(vecCol).cast("array<double>"))
+      .collect()
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    rows.foreach(r => if (!r.isNullAt(0) && !seen.add(r.get(0))) {
+      throw new IllegalArgumentException(
+        s"$caller: duplicate query id ${r.get(0)} — each query id must " +
+          "appear once")
+    })
+    val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map { r =>
+        val v = r.getSeq[Double](1).toArray
+        (r.get(0), v, localDot(v, 0, v, 0, v.length))
+      }
+      .filter { case (_, _, vv) => SQLOrderingUtil.compareDoubles(vv, 0.0) > 0 }
+    val dim = cb.length * cb(0)(0).length
+    kept.foreach { case (_, v, _) =>
+      if (v.length != dim) {
+        throw new IllegalArgumentException(
+          s"pq: expected dim $dim, got ${v.length}")
+      }
+    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    AdcQueries(idType, kept.map(p => toCatalyst(p._1)), kept.map(_._2),
+      kept.map(p => math.sqrt(p._3)))
+  }
+
+  /** The coarse half of an IVF-PQ probe: centroids sorted by cid (the
+    * scan kernel binary-searches a row's list) with ‖c‖², and per
+    * centroid the queries probing it with their dot(q, c).
+    */
+  private final case class CoarseProbe(cids: Array[Long],
+      cvs: Array[Array[Double]], cn0: Array[Double],
+      probers: Array[Array[Int]], qc0: Array[Array[Double]])
+
+  /** Rank each query's `nprobe` nearest centroids as the probe window
+    * did: cosine = dot(q, c) / (sqrt(dot(q, q))·sqrt(dot(c, c))), desc
+    * under Spark's double ordering (NaN first, −0.0 = 0.0), ties to the
+    * lowest cid; a zero denominator fails as ANSI division does.
+    */
+  private def coarseProbe(q: AdcQueries, centroids: DataFrame,
+      cb: Array[Array[Array[Double]]], nprobe: Int): CoarseProbe = {
+    val (cids0, cvs0) = localCentroids(centroids)
+    val order = cids0.indices.sortBy(cids0(_)).toArray
+    val cids = order.map(cids0)
+    val cvs = order.map(cvs0)
+    cids.indices.drop(1).foreach(c => require(cids(c) != cids(c - 1),
+      s"ivf: duplicate cid ${cids(c)} in the centroid frame"))
+    val dim = cb.length * cb(0)(0).length
+    cvs.foreach(c => if (c.length != dim) {
+      throw new IllegalArgumentException(
+        s"pq: expected dim $dim, got ${c.length}")
+    })
+    val cn0 = cvs.map(c => localDot(c, 0, c, 0, dim))
+    val probers = Array.fill(cids.length)(Array.newBuilder[Int])
+    val qc0 = Array.fill(cids.length)(Array.newBuilder[Double])
+    q.vecs.indices.foreach { qi =>
+      val dots = cvs.map(c => localDot(q.vecs(qi), 0, c, 0, dim))
+      val sims = cids.indices.map { c =>
+        val den = q.norms(qi) * math.sqrt(cn0(c))
+        if (den == 0.0) {
+          throw new ArithmeticException(
+            s"ivf: zero-norm query or centroid ${cids(c)} (cosine " +
+              "undefined; ANSI division by zero)")
+        }
+        dots(c) / den
+      }
+      // stable sort over cid-ascending indices: ties keep the lower cid
+      cids.indices.sortWith((a, b) =>
+          SQLOrderingUtil.compareDoubles(sims(a), sims(b)) > 0)
+        .take(math.max(nprobe, 0)).foreach { c =>
+          probers(c) += qi
+          qc0(c) += dots(c)
+        }
+    }
+    CoarseProbe(cids, cvs, cn0, probers.map(_.result()),
+      qc0.map(_.result()))
+  }
+
+  /** [[dot]]'s accumulation on driver arrays: Σ a(aOff+i)·b(bOff+i) for
+    * i in 0 until n, left to right in double.
+    */
+  private def localDot(a: Array[Double], aOff: Int, b: Array[Double],
+      bOff: Int, n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(aOff + i) * b(bOff + i); i += 1 }
+    acc
+  }
+
+  /** The kernel's tables: ‖q‖, the Q×M×K partial dots
+    * dot(q_m, codeword(m, code)), the M×K codeword norms and, for an
+    * IVF-PQ probe, ‖c‖² and the C×M×K terms dot(c_m, codeword(m, code)).
+    */
+  private def adcTables(q: AdcQueries, cb: Array[Array[Array[Double]]],
+      coarse: Option[CoarseProbe]): graft.functions.PqAdcTables = {
+    val m = cb.length
+    val k = cb(0).length
+    val subDim = cb(0)(0).length
+    def partialDots(vecs: Array[Array[Double]]): Array[Double] =
+      Array.tabulate(vecs.length * m * k) { i =>
+        val j = (i / k) % m
+        localDot(vecs(i / (m * k)), j * subDim, cb(j)(i % k), 0, subDim)
+      }
+    val cwn = Array.tabulate(m * k) { i =>
+      val w = cb(i / k)(i % k)
+      localDot(w, 0, w, 0, subDim)
+    }
+    new graft.functions.PqAdcTables(q.ids, q.norms, m, k, partialDots(q.vecs),
+      cwn, coarse.map(p => new graft.functions.PqAdcCoarse(p.cids, p.cn0,
+        partialDots(p.cvs), p.probers, p.qc0)).orNull)
+  }
+
+  /** One pass over the coded rows (neighbor_id, codes[, cid]) through the
+    * scan kernel: (query_id, neighbor_id, sim). The tables travel as one
+    * broadcast, fetched once per executor. The self-match filter stays a
+    * Spark predicate on the emitted rows, so the id comparison keeps
+    * Spark's coercion between the rows' and the queries' id types.
+    */
+  private def adcScan(rows: DataFrame, codes: Column, cid: Option[Column],
+      tables: graft.functions.PqAdcTables, idType: DataType): DataFrame = {
+    val bc = rows.sparkSession.sparkContext.broadcast(tables)
+    rows
+      .select(col("neighbor_id"), explode(graft.functions.PqFunctions
+        .pqAdcScan(codes, cid.map(_.cast("long")), bc, idType)).as("__s"))
+      .select(col("__s.query_id").as("query_id"), col("neighbor_id"),
+        col("__s.sim").as("sim"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(qd), Seq("query_id", "m", "code"))
-      .join(broadcast(ct), Seq("cid", "m", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"), col("cid"))
-      .agg(sum(col("__qd")).as("__num_r"), sum(col("__cc")).as("__cross"),
-        sum(col("__cwn")).as("__rn"))
-      .join(broadcast(probes.select(col("query_id"), col("cid"),
-        col("__qc0"), col("__qn"))), Seq("query_id", "cid"))
-      .join(broadcast(cn0), Seq("cid"))
-      .withColumn("__n2",
-        col("__cn0") + lit(2.0) * col("__cross") + col("__rn"))
-      .filter(col("__n2") > 0)
-      .withColumn("sim",
-        (col("__qc0") + col("__num_r")) / (col("__qn") * sqrt(col("__n2"))))
-    topKEmit(scored, k)
   }
 
   /** One-shot build→probe IVFADC — the fixture-scale teaching path and

@@ -1,10 +1,7 @@
 package graft.operators
 
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -776,36 +773,8 @@ class GraphsSpec extends SparkSpec {
       "hits" -> (k => Graphs.hits(g, k)))
   }
 
-  /** Spark jobs started while `body` runs. A one-task fence job before
-    * and after brackets the count: the listener bus delivers events in
-    * order, so once the closing fence arrives every job of `body` has.
-    */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val fences = new LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.fence")) match {
-          case Some(tag: String) => fences.put(tag)
-          case _ => jobs.incrementAndGet()
-        }
-    }
-    def fence(tag: String): Unit = {
-      sc.setLocalProperty("graft.fence", tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.fence", null)
-      assert(fences.poll(60, TimeUnit.SECONDS) == tag, s"fence $tag lost")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("open")
-      jobs.set(0)
-      body
-      fence("close")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Any): Int =
+    graft.SparkJobs.during(spark)(body)
 
   test("round loops: Spark jobs per call pinned at 2 and 5 iterations") {
     // Measured on the fixtures with the local[4] test session. Each
