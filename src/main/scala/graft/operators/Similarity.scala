@@ -5,13 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types._
 
 /** A built IVF index — the build-once half of the build/probe split
   * ([[Similarity.buildIvfIndex]] / [[Similarity.probeIvfQuantized]]).
   *
   *  - `centroids`: (cid, __cv) float coarse-quantizer centroids —
-  *    metadata-sized (numCentroids rows), broadcast at probe time.
+  *    metadata-sized (numCentroids rows), collected to the driver at
+  *    probe time.
   *  - `lists`: (cid, neighbor_id, scale, codes, norm) int8 inverted
   *    lists; `norm` = sqrt(dot(codes, codes)) is precomputed at build
   *    time so the probe's per-candidate work is exactly one int-dot.
@@ -532,17 +533,7 @@ object Similarity {
         graft.functions.PqFunctions
           .pqNearestCode(col("__v"), col("m"), cbArr).as("cid"),
         col("__v"))
-      val means = assigned
-        .select(col("m"), col("cid"),
-          posexplode(col("__v")).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("cid"), col("pos"))
-        .agg(avg(col("x")).as("mu"))
-        .groupBy(col("m"), col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
-          s => s.getField("mu")).as("__nv"))
-      cents = localFrame(cents.join(means, Seq("m", "cid"), "left")
-        .select(col("m"), col("cid"),
-          coalesce(col("__nv"), col("__cv")).as("__cv")))
+      cents = lloydUpdate(cents, assigned, Seq("m", "cid"))
     }
     cents
   }
@@ -624,12 +615,9 @@ object Similarity {
     */
   private[operators] def pqAdcScores(codes: DataFrame, queries: DataFrame,
       codebooks: DataFrame, idCol: String, vecCol: String,
-      codesCol: String): DataFrame = {
-    val cb = localCodebookArray(codebooks)
-    val q = adcQueries(queries, cb, idCol, vecCol, "pqAdcTopK")
-    adcScan(codes.select(col(idCol).as("neighbor_id"), col(codesCol)),
-      col(codesCol), None, adcTables(q, cb, None), q.idType)
-  }
+      codesCol: String): DataFrame =
+    adc(codes, idCol, codesCol, queries, codebooks, None, idCol, vecCol,
+      "pqAdcTopK")._1
 
   /** ADC shortlist + exact float re-rank (Jégou §VII, the "IVFADC+R"
     * refinement — the shape every production PQ deployment runs): PQ
@@ -640,7 +628,8 @@ object Similarity {
     * shortlist/corpus — while the float vectors are touched for
     * shortlist × queries rows instead of the corpus (the broadcast
     * candidate set prunes the fetch join; at 100 TB the vectors come
-    * from the store by id, never scanned for ranking).
+    * from the store by id, never scanned for ranking). The re-rank
+    * reads the queries the ADC step collected ([[floatRerank]]).
     */
   def pqAdcRerankTopK(
       emb: DataFrame,
@@ -653,18 +642,25 @@ object Similarity {
       vecCol: String = "embedding",
       codesCol: String = "codes"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cand = pqAdcTopK(codes, queries, codebooks, shortlist,
-      idCol, vecCol, codesCol).select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries
-      .filter(dot(col(vecCol), col(vecCol)) > 0)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv")))
-    val scored = emb
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"))
-      .join(broadcast(cand), Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("sim", cosine(col("__qv"), col("__v")))
-    topKEmit(scored, k)
+    val (scores, q) = adc(codes, idCol, codesCol, queries, codebooks, None,
+      idCol, vecCol, "pqAdcTopK")
+    floatRerank(emb, topKEmit(scores, shortlist), q, k, idCol, vecCol)
   }
+
+  /** The float re-rank both ADC+R rungs share: each query's shortlisted
+    * neighbors (a broadcast candidate set prunes the vector fetch) are
+    * scored by the TRUE cosine against the query vectors the ADC step
+    * already collected, shipped as a local frame — the queries are not
+    * re-read.
+    */
+  private def floatRerank(emb: DataFrame, shortlisted: DataFrame,
+      q: AdcQueries, k: Int, idCol: String, vecCol: String): DataFrame =
+    topKEmit(emb
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"))
+      .join(broadcast(shortlisted.select(col("query_id"),
+        col("neighbor_id"))), Seq("neighbor_id"))
+      .join(broadcast(queryFrame(emb.sparkSession, q, None)), Seq("query_id"))
+      .withColumn("sim", cosine(col("__qv"), col("__v"))), k)
 
   /** One-shot train→encode→ADC — the fixture-scale teaching path and
     * recall-gate target, mirroring [[ivfTopK]]'s role next to
@@ -686,14 +682,6 @@ object Similarity {
       iterations, idCol, vecCol)
     pqAdcTopK(pqEncode(emb, cb, dim, idCol, vecCol), queries, cb, k,
       idCol, vecCol)
-  }
-
-  /** (numSubspaces, subDim) off a codebook frame, read from
-    * [[localCodebookArray]]: no job on an already-local codebook frame.
-    */
-  private def pqShape(codebooks: DataFrame): (Int, Int) = {
-    val cb = localCodebookArray(codebooks)
-    (cb.length, cb(0)(0).length)
   }
 
   // ---------------------------------------------- local-literal argmin
@@ -736,14 +724,19 @@ object Similarity {
     arr
   }
 
-  /** [[localCodebookArray]] as a nested literal column — for the
-    * per-row codeword LOOKUP ([[pqReconstruct]]), where `element_at`
-    * on a literal is O(1) and the codes input is a plain attribute.
+  /** The PQ codec's reconstruction: the codewords of `codes`, looked up
+    * per row in [[localCodebookArray]] as a nested literal (`element_at`
+    * on a literal is O(1) and the codes input is a plain attribute) and
+    * flattened in m order. Round 21: the explode → broadcast join →
+    * collect_list re-assembly built the same array with one shuffle;
+    * identical codeword doubles, same float→double widening, zero
+    * shuffles.
     */
-  private def codebookLit(codebooks: DataFrame): Column = {
+  private def codewords(codes: Column, codebooks: DataFrame): Column = {
     val nested: Seq[Seq[Seq[Double]]] =
       localCodebookArray(codebooks).toSeq.map(_.toSeq.map(_.toSeq))
-    typedLit(nested)
+    flatten(transform(codes, (code, m) =>
+      element_at(element_at(typedLit(nested), m + 1), code + 1)))
   }
 
   /** argmax_cid cosine(v, centroid) with ties to the lowest cid over a
@@ -753,7 +746,7 @@ object Similarity {
     * r21: the prior per-centroid `struct(lit, typedLit)` literal array
     * bloated the plan toward the 64KB codegen method limit, and the
     * `transform` lambda re-evaluated a DERIVED vector input — e.g.
-    * [[pqReconstruct]]'s output under [[kmeansCentroids]] — once per
+    * [[reconstructPq]]'s output under [[kmeansCentroids]] — once per
     * centroid, the CollapseProject hazard). Centroids ride the exact
     * float→double widening the join path's `cast("array<double>")`
     * performed; cids are vector ids (not 0..K−1), integral by
@@ -865,22 +858,33 @@ object Similarity {
       // 21/22; see [[assignNearest]]) — the C-way join explosion and
       // the (nid)-keyed assignment shuffle are gone; each sweep is one
       // scan feeding the (cid, pos) mean aggregate directly, and the
-      // kernel evaluates a derived vecCol (e.g. [[pqReconstruct]]'s
+      // kernel evaluates a derived vecCol (e.g. [[reconstructPq]]'s
       // output) ONCE per row instead of once per centroid
       val assigned = emb.select(col(idCol).as("nid"), col(vecCol).as("__v"))
         .select(col("nid"), nearestCentroid(cents, col("__v")).as("cid"),
           col("__v"))
-      val means = assigned
-        .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("__nv"))
-      cents = localFrame(cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("__nv"), col("__cv")).as("__cv")))
+      cents = lloydUpdate(cents, assigned, Seq("cid"))
     }
     cents
+  }
+
+  /** One Lloyd update, shared by the coarse quantizer and the PQ
+    * codebooks: the per-`keys` mean of the assigned vectors `__v`
+    * (posexplode → grouped avg → array reassembly in pos order), an
+    * emptied cluster keeping its previous centroid (left join +
+    * coalesce), collected into a local frame.
+    */
+  private def lloydUpdate(cents: DataFrame, assigned: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val means = assigned
+      .select(k :+ posexplode(col("__v")).as(Seq("pos", "x")): _*)
+      .groupBy(k :+ col("pos"): _*).agg(avg(col("x")).as("mu"))
+      .groupBy(k: _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
+        s => s.getField("mu")).as("__nv"))
+    localFrame(cents.join(means, keys, "left")
+      .select(k :+ coalesce(col("__nv"), col("__cv")).as("__cv"): _*))
   }
 
   /** IVF (inverted-file) approximate top-k — the FLOAT-list form.
@@ -889,10 +893,13 @@ object Similarity {
     * initial centroids (see [[centroidInit]]), optionally refined by
     * `kmeansIterations` Lloyd sweeps ([[kmeansCentroids]]) —
     * deterministic either way. Every corpus vector is assigned to its
-    * nearest centroid (one broadcast join + `max_by` aggregation); each
-    * query probes its `nprobe` nearest centroids and ranks only those
-    * lists. Recall < 1 by construction — verified by rows/schema, not a
-    * value oracle.
+    * nearest centroid (the codegen'd centroid kernel, one pass); the
+    * queries are collected once and each ranks its `nprobe` nearest
+    * centroids on the driver ([[coarseProbe]], the probe every IVF rung
+    * shares), so only those lists are scored. Each query id must appear
+    * once, and a query must have the centroids' dimension; either
+    * violation fails naming it. Recall < 1 by construction — verified
+    * by rows/schema, not a value oracle.
     *
     * Intent (round 15, closes the build/probe asymmetry note): this
     * one-shot float form is deliberately NOT split into build/probe
@@ -915,24 +922,19 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val cents =
       centroidInit(emb, numCentroids, kmeansIterations, idCol, vecCol)
-    val assigned = assignNearest(emb, cents, idCol, vecCol)
-
-    // Each query probes its nprobe nearest lists.
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qs").desc, col("cid").asc)
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .filter(dot(col("__qv"), col("__qv")) > 0)
-      .join(broadcast(cents))
-      .withColumn("__qs", cosine(col("__qv"), col("__cv")))
-      .withColumn("__pr", row_number().over(wq))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("__qv"), col("cid"))
-
-    val scored = probes.join(assigned, "cid")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("__qv"), col("__v")))
-    topKEmit(scored, k)
+    topKEmit(ivfTopKScores(assignNearest(emb, cents, idCol, vecCol), cents,
+      queries, nprobe, idCol, vecCol), k)
   }
+
+  /** [[ivfTopK]]'s candidate scores before the top-k over assigned float
+    * lists (cid, neighbor_id, __v): (query_id, neighbor_id, sim, ...),
+    * unrounded.
+    */
+  private[operators] def ivfTopKScores(assigned: DataFrame, cents: DataFrame,
+      queries: DataFrame, nprobe: Int, idCol: String, vecCol: String) =
+    ivfCandidates(assigned, cents, queries, nprobe, idCol, vecCol,
+        "ivfTopK")(identity)
+      .withColumn("sim", cosine(col("__qv"), col("__v")))
 
   /** Quantized IVF approximate top-k — [[ivfTopK]] with the inverted
     * lists stored as int8 CODES instead of float vectors, probed by the
@@ -1073,9 +1075,8 @@ object Similarity {
       newEmb: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): IvfIndex =
-    IvfIndex(index.centroids,
-      index.lists.unionByName(
-        assignLists(newEmb, index.centroids, idCol, vecCol)))
+    index.copy(lists = index.lists.unionByName(
+      assignLists(newEmb, index.centroids, idCol, vecCol)))
 
   /** [[appendToIvfIndex]] for a [[writeIvfIndex]]-stored index: assign
     * the batch against the STORED centroids and hive-append only the new
@@ -1090,11 +1091,9 @@ object Similarity {
       path: String,
       newEmb: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    assignLists(newEmb, cents, idCol, vecCol)
-      .write.partitionBy("cid").mode("append").parquet(s"$path/lists")
-  }
+      vecCol: String = "embedding"): Unit =
+    storeIndex(path, assignLists(newEmb, storedPart(spark, path, "centroids"),
+      idCol, vecCol), "append")
 
   /** One maintenance pass of [[maintainIvfIndex]]: what happened, and
     * the recall evidence it acted on.
@@ -1119,26 +1118,29 @@ object Similarity {
     * a shifted batch quantizes exactly as faithfully as the build
     * corpus did and the only decay mode is the coarse probe miss this
     * loop already measures. PQ decays doubly because its codebooks ARE
-    * corpus-trained; that is the asymmetry, not an omission.
+    * corpus-trained; that is the asymmetry, not an omission. Past the
+    * append, both rungs run one loop ([[maintainLoop]]).
     *
     * Ground truth is the brute-force top-k over the index's OWN
     * dequantized lists — the corpus projection the index already stores
     * — so maintenance never re-reads or re-embeds the corpus
     * ([[compactIvfIndex]]'s discipline); the measured recall is "of
     * what the index could possibly return", which is exactly the
-    * quantity the frozen-centroid decay erodes. Cost per pass: the
-    * batch-sized append write + one |probes| × |lists| dot-product scan
-    * (the q91 artifact's cost — probes are held-out and metadata-sized
-    * by contract) and, when triggered, the compaction sweeps plus one
-    * full lists rewrite ([[writeIvfIndex]] overwrite — relabeled
-    * entries move between cid partitions, so a rewrite is the operation,
-    * not an implementation shortcut). The relabeled lists are staged
-    * eagerly (localCheckpoint) before that overwrite — the compacted
-    * plan reads the very files the write replaces; at a scale where
-    * staging the lists in cluster storage hurts, write to a versioned
-    * sibling directory and flip a pointer instead.
+    * quantity the frozen-centroid decay erodes. Cost per pass: one read
+    * of the stored centroids (they serve the append and the probes),
+    * the batch-sized append write + one |probes| × |lists| dot-product
+    * scan (the q91 artifact's cost — probes are held-out and
+    * metadata-sized by contract) and, when triggered, the compaction
+    * sweeps plus one full lists rewrite ([[writeIvfIndex]] overwrite —
+    * relabeled entries move between cid partitions, so a rewrite is the
+    * operation, not an implementation shortcut). The relabeled lists are
+    * staged eagerly (localCheckpoint) before that overwrite — the
+    * compacted plan reads the very files the write replaces; at a scale
+    * where staging the lists in cluster storage hurts, write to a
+    * versioned sibling directory and flip a pointer instead.
     *
-    * The recall scalar is the only thing collected (one averaged row).
+    * The recall scalar is the only thing collected (one averaged row);
+    * an empty or all-zero-norm probe set fails naming this method.
     */
   def maintainIvfIndex(
       spark: SparkSession,
@@ -1154,33 +1156,58 @@ object Similarity {
     require(recallFloor > 0.0 && recallFloor <= 1.0,
       s"recallFloor must be in (0, 1], got $recallFloor")
     val appended = batch.count()
-    if (appended > 0L) {
-      appendToStoredIvfIndex(spark, path, batch, idCol, vecCol)
-    }
-    def meanRecall(index: IvfIndex): Double = {
-      val recon = index.lists.select(col("neighbor_id").as(idCol),
-        transform(col("codes"), c => c.cast("double") * col("scale"))
-          .as(vecCol))
-      val exact = bruteForceTopK(recon, probes, k, idCol, vecCol)
-      val approx = probeIvfQuantized(index, probes, k, nprobe, idCol, vecCol)
-      recallAtK(approx, exact).agg(avg(col("recall")))
-        .collect()(0).getDouble(0)
-    }
-    val grown = readIvfIndex(spark, path)
-    val before = meanRecall(grown)
-    if (before >= recallFloor) {
-      IvfMaintenanceReport(appended, before, compacted = false, before)
-    } else {
-      val compacted = compactIvfIndex(grown, iterations)
-      // stage before overwrite: the relabeled plan reads the files the
-      // write replaces (see scaladoc)
-      val staged = IvfIndex(compacted.centroids,
-        compacted.lists.transform(Persist.round))
-      writeIvfIndex(staged, path)
-      val after = meanRecall(readIvfIndex(spark, path))
-      IvfMaintenanceReport(appended, before, compacted = true, after)
-    }
+    val cents = storedPart(spark, path, "centroids")
+    if (appended > 0L)
+      storeIndex(path, assignLists(batch, cents, idCol, vecCol), "append")
+    def recall(ix: IvfIndex): Double = meanRecall(
+      ix.lists.select(col("neighbor_id"), dequantized),
+      probeIvfQuantized(ix, probes, k, nprobe, idCol, vecCol), probes, k,
+      idCol, vecCol, "maintainIvfIndex")
+    val (before, compacted, after) = maintainLoop(
+      IvfIndex(cents, storedPart(spark, path, "lists")), recallFloor, recall)(
+      compactIvfIndex(_, iterations),
+      ix => writeIvfIndex(ix.copy(lists = ix.lists.transform(Persist.round)),
+        path),
+      readIvfIndex(spark, path))
+    IvfMaintenanceReport(appended, before, compacted, after)
   }
+
+  /** The maintenance loop both IVF rungs run once their batch is in the
+    * stored lists: measure the recall of `grown`; at or above
+    * `recallFloor` stop, else compact, write (the writer stages the
+    * compacted lists first: their plan reads the files the overwrite
+    * replaces) and measure the re-read index. Returns (recall before,
+    * compacted, recall after).
+    */
+  private def maintainLoop[I](grown: I, recallFloor: Double,
+      recall: I => Double)(compact: I => I, write: I => Unit,
+      reread: => I): (Double, Boolean, Double) = {
+    val before = recall(grown)
+    if (before >= recallFloor) (before, false, before)
+    else { write(compact(grown)); (before, true, recall(reread)) }
+  }
+
+  /** Mean recall@k of `approx` against the brute-force top-k of
+    * `probes` over `recon`, an index's own reconstruction as (id,
+    * vector) columns. Zero-norm probes are left out of the ground truth
+    * as every probe leaves them out (their cosine is 0/0); an empty or
+    * all-zero-norm probe set averages to NULL and fails naming `caller`
+    * rather than as an opaque NPE.
+    */
+  private def meanRecall(recon: DataFrame, approx: DataFrame, probes: DataFrame,
+      k: Int, idCol: String, vecCol: String, caller: String): Double = {
+    val exact = bruteForceTopK(recon.toDF(idCol, vecCol),
+      probes.filter(dot(col(vecCol), col(vecCol)) > 0), k, idCol, vecCol)
+    val row = recallAtK(approx, exact).agg(avg(col("recall"))).collect()(0)
+    require(!row.isNullAt(0),
+      s"$caller: probes produced no recall rows — the probes frame must " +
+        "contain at least one non-zero-norm vector")
+    row.getDouble(0)
+  }
+
+  /** An int8 list entry reconstructed: codesᵢ·scale. */
+  private def dequantized: Column =
+    transform(col("codes"), c => c.cast("double") * col("scale"))
 
   /** Compact a drifted index: re-run Lloyd sweeps with the CURRENT
     * centroids as the warm start, over the corpus AS THE LISTS STORE IT
@@ -1201,9 +1228,10 @@ object Similarity {
     *
     * Scale shape: `iterations` Lloyd sweeps over the dequantized lists
     * (each one scan + a metadata collect, [[kmeansCentroids]]'s
-    * discipline) + one assignment pass whose `max_by` carries the entry
-    * struct — no self-join, no corpus shuffle beyond the per-entry
-    * argmax aggregation. Quantization noise makes dequantized
+    * discipline) + one relabel pass through the centroid kernel
+    * ([[assignNearest]]'s argmax), the payload columns riding through
+    * untouched — no self-join; the only shuffle is the duplicate-id
+    * guard's. Quantization noise makes dequantized
     * assignments differ from build-time float assignments by at most
     * the code rounding (~0.4% of a coordinate) — inside the noise the
     * recall contract already absorbs.
@@ -1220,82 +1248,50 @@ object Similarity {
     * List-id uniqueness contract (ADVICE r15): `neighbor_id` must be
     * unique across the lists — the append paths ([[appendToIvfIndex]],
     * [[appendToStoredIvfIndex]]) do not guard against re-appending a
-    * batch, and the per-id `groupBy` here would silently collapse any
-    * duplicate entries to one, making compaction NOT the pure relabel
-    * the contract promises (invisibly to the payload set-equality
-    * spec). The guard is in-plan: a duplicate id fails the job loudly,
-    * naming the id, instead of quietly "fixing" a double-append.
+    * batch, and a duplicate entry would make compaction NOT the pure
+    * relabel the contract promises. The guard is in-plan
+    * ([[uniqueEntries]]): a duplicate id fails the job loudly, naming
+    * the id, instead of quietly "fixing" a double-append.
     */
   def compactIvfIndex(index: IvfIndex, iterations: Int = 2): IvfIndex = {
     require(iterations >= 1,
       s"compaction without Lloyd sweeps is a no-op relabel, got $iterations")
     val recon = index.lists.select(col("neighbor_id").as("vec_id"),
-      transform(col("codes"), c => c.cast("double") * col("scale"))
-        .as("embedding"))
+      dequantized.as("embedding"))
     val cents = kmeansCentroids(recon, index.centroids, iterations)
-    // metadata-bounded eager count (numCentroids rows) — feeds the
-    // duplicate-id guard below; kmeansCentroids already ran eager sweeps
-    val nCents = cents.count()
-    val relabeled = index.lists
-      .withColumn("__v",
-        transform(col("codes"), c => c.cast("double") * col("scale")))
-      .drop("cid")
-      .join(broadcast(cents))
-      .withColumn("__cs", cosine(col("__v"), col("__cv")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(struct(col("cid"), col("scale"), col("codes"), col("norm")),
-        struct(col("__cs"), -col("cid"))).as("__e"),
-        // one row per (entry, centroid) reaches this agg, so a unique id
-        // contributes exactly |centroids| rows — more means duplicate
-        // list entries (double-append); the check piggybacks on the agg,
-        // no extra pass (ADVICE r15)
-        count(lit(1)).as("__n"))
-      .select(
-        when(col("__n") > nCents,
-          raise_error(concat(lit("compactIvfIndex: duplicate neighbor_id "),
-            col("neighbor_id").cast("string"),
-            lit(" in lists — was a batch appended twice?"))))
-          .otherwise(col("__e.cid")).as("cid"),
-        col("neighbor_id"),
-        col("__e.scale").as("scale"), col("__e.codes").as("codes"),
-        col("__e.norm").as("norm"))
-    IvfIndex(cents, relabeled)
+    IvfIndex(cents, uniqueEntries(index.lists, "compactIvfIndex")
+      .withColumn("cid", nearestCentroid(cents, dequantized)))
   }
 
-  /** Probe-MANY half: rank each query's `nprobe` nearest centroids on
-    * float cosine (the centroid table is metadata-sized), then score
-    * only those lists with the int-code dot ([[quantizedTopK]]'s
-    * arithmetic — scales cancel in the cosine, the candidate score is
-    * the int-dot over code norms).
+  /** `lists` with `neighbor_id` guarded unique (ADVICE r15): a duplicate
+    * entry — a batch appended twice — fails the job naming the id and
+    * `caller`, instead of being silently collapsed (a relabel) or
+    * interleaved (a reconstruction). Costs one neighbor_id-keyed shuffle.
+    */
+  private def uniqueEntries(lists: DataFrame, caller: String): DataFrame =
+    lists.withColumn("neighbor_id",
+      when(count(lit(1)).over(Window.partitionBy(col("neighbor_id"))) > 1,
+        raise_error(concat(lit(s"$caller: duplicate neighbor_id "),
+          col("neighbor_id").cast("string"),
+          lit(" in lists — was a batch appended twice?"))))
+        .otherwise(col("neighbor_id")))
+
+  /** Probe-MANY half: the queries are collected once and each ranks its
+    * `nprobe` nearest centroids on float cosine on the driver
+    * ([[coarseProbe]], shared by every IVF rung — the centroid table is
+    * metadata-sized); only those lists are scored, with the int-code dot
+    * ([[quantizedTopK]]'s arithmetic — scales cancel in the cosine, the
+    * candidate score is the int-dot over code norms). Each query id must
+    * appear once, and a query must have the centroids' dimension; either
+    * violation fails naming it.
     *
-    * The probed-cid set (≤ numCentroids values — metadata-sized, the
-    * same class as the centroid broadcast) is collected once and pushed
-    * as an `isin` filter in the LISTS' cid type, so a
-    * [[writeIvfIndex]]-stored lists table prunes to exactly the probed
-    * hive partitions (`PartitionFilters` in the scan — asserted by
-    * SimilaritySpec's plan test; unprobed lists cost zero I/O). An
-    * in-memory lists frame just gains a cheap filter.
-    *
-    * NOTE — this method runs an EAGER Spark job at call time (ADVICE
-    * r14): the static cid pruning above requires the probed-cid set
-    * before the returned plan can be built, so the probe subtree
-    * (queries × centroids ranking) executes here, not at the caller's
-    * first action. The probe frame is localCheckpointed by that same
-    * job — nprobe rows per query, batch-sized — so the returned plan
-    * REUSES it rather than recomputing the ranking window a second
-    * time; a DataFrame-returning builder pays the probe pass exactly
-    * once either way.
-    *
-    * Per-call retention (ADVICE r15): the checkpointed probe frame's
-    * storage blocks live until the SparkSession ends — they cannot be
-    * unpersisted here because the RETURNED plan references them, and a
-    * DataFrame gives no completion hook. Each is batch-sized (nprobe
-    * rows per query), so a long-running probe service calling this in a
-    * loop accumulates ~|batch| rows of block storage per call; such a
-    * service should periodically recycle its session, or call
-    * `spark.sharedState.cacheManager`-level cleanup between batches,
-    * the same lifecycle discipline as any checkpoint-per-request
-    * server.
+    * The probed-cid set (≤ numCentroids values) becomes an `isin` filter
+    * in the LISTS' cid type, so a [[writeIvfIndex]]-stored lists table
+    * prunes to exactly the probed hive partitions (`PartitionFilters` in
+    * the scan — asserted by SimilaritySpec's plan test; unprobed lists
+    * cost zero I/O). An in-memory lists frame just gains a cheap filter.
+    * The call runs the query collect (and, for a stored index, the read
+    * of its small centroid file); the returned plan is lazy.
     */
   def probeIvfQuantized(
       index: IvfIndex,
@@ -1303,38 +1299,50 @@ object Similarity {
       k: Int,
       nprobe: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val cents = broadcast(index.centroids)
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("__qs").desc, col("cid").asc)
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qq", graft.functions.VectorFunctions.int8Quantize(col("__qv")))
-      .withColumn("__qc", col("__qq.codes"))
-      .withColumn("__qn", sqrt(dot(col("__qc"), col("__qc"))))
-      .filter(col("__qn") > 0)
-      .join(cents)
-      .withColumn("__qs", cosine(col("__qv"), col("__cv")))
-      .withColumn("__pr", row_number().over(wq))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("__qc"), col("__qn"), col("cid"))
-      // eager: the cid collect below needs this subtree NOW; checkpointing
-      // it in the same job lets the returned plan reuse it (see scaladoc)
-      .transform(Persist.round)
-    // Static partition pruning: collect the probed cids (bounded by
-    // numCentroids — metadata, not data) in the lists' own cid type (a
-    // hive-partitioned read may have narrowed long cids to int; a cast
-    // on the ATTRIBUTE side would block pruning, so the literals are
-    // cast instead).
-    val cidType = index.lists.schema("cid").dataType
-    val probedCids = probes.select(col("cid").cast(cidType)).distinct()
-      .collect().map(_.get(0)).toSeq
-    val lists = index.lists.filter(col("cid").isin(probedCids: _*))
-    val scored = probes.join(lists, "cid")
-      .filter(col("neighbor_id") =!= col("query_id"))
+      vecCol: String = "embedding"): DataFrame =
+    topKEmit(probeIvfQuantizedScores(index, queries, nprobe, idCol, vecCol), k)
+
+  /** [[probeIvfQuantized]]'s candidate scores before the top-k:
+    * (query_id, neighbor_id, sim, ...), unrounded.
+    */
+  private[operators] def probeIvfQuantizedScores(index: IvfIndex,
+      queries: DataFrame, nprobe: Int, idCol: String, vecCol: String) =
+    ivfCandidates(index.lists, index.centroids, queries, nprobe, idCol,
+        vecCol, "probeIvfQuantized")(
+        _.withColumn("__qc", graft.functions.VectorFunctions
+            .int8Quantize(col("__qv")).getField("codes"))
+          .withColumn("__qn", sqrt(dot(col("__qc"), col("__qc"))))
+          .filter(col("__qn") > 0))
       .withColumn("sim",
         dot(col("__qc"), col("codes")) / (col("__qn") * col("norm")))
-    topKEmit(scored, k)
+
+  /** The float and int8 probes' candidate pairs: the kept queries (a
+    * local frame, `__qv` widened to double) beside their probed `cid`s
+    * ([[coarseProbe]] against `centroids`, whose dimension every query
+    * must have), `prep`ared once per (query, list), joined to the
+    * [[probedLists]] entries; self-matches excluded.
+    */
+  private def ivfCandidates(lists: DataFrame, centroids: DataFrame,
+      queries: DataFrame, nprobe: Int, idCol: String, vecCol: String,
+      caller: String)(prep: DataFrame => DataFrame): DataFrame = {
+    val cents = localCentroids(centroids)
+    val dim = cents._2(0).length
+    val q = adcQueries(queries, dim, idCol, vecCol, caller, caller)
+    val probe = coarseProbe(q, cents, dim, nprobe, caller)
+    prep(queryFrame(queries.sparkSession, q, Some(probe)))
+      .join(probedLists(lists, probe), "cid")
+      .filter(col("neighbor_id") =!= col("query_id"))
   }
+
+  /** `lists` narrowed to the probed cids by a static `isin` in the lists'
+    * own cid type: a hive-partitioned read may have narrowed long cids to
+    * int, and a cast on the ATTRIBUTE side would block partition pruning,
+    * so the literals are cast instead.
+    */
+  private def probedLists(lists: DataFrame, probe: CoarseProbe): DataFrame =
+    lists.filter(col("cid").isin(probe.cids.indices
+      .filter(probe.probers(_).nonEmpty)
+      .map(c => lit(probe.cids(c)).cast(lists.schema("cid").dataType)): _*))
 
   /** Persist an [[IvfIndex]]: lists hive-partitioned by `cid` (so
     * [[probeIvfQuantized]]'s isin filter becomes partition pruning —
@@ -1342,16 +1350,28 @@ object Similarity {
     * parquet. At 100 TB, numCentroids should be sized in the thousands
     * so each list directory holds ~GB-class files.
     */
-  def writeIvfIndex(index: IvfIndex, path: String): Unit = {
-    graft.sources.Layout.writePartitioned(index.lists, s"$path/lists",
-      Seq("cid"))
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-  }
+  def writeIvfIndex(index: IvfIndex, path: String): Unit =
+    storeIndex(path, index.lists, "overwrite", "centroids" -> index.centroids)
 
   /** Reopen a stored [[IvfIndex]] for [[probeIvfQuantized]]. */
   def readIvfIndex(spark: SparkSession, path: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/lists"))
+    IvfIndex(storedPart(spark, path, "centroids"),
+      storedPart(spark, path, "lists"))
+
+  /** The one store path of both IVF rungs: the lists hive-partitioned by
+    * `cid` under `path/lists` in `mode` (overwrite for a write, append
+    * for a batch), the small side tables overwritten beside them.
+    */
+  private def storeIndex(path: String, lists: DataFrame, mode: String,
+      sides: (String, DataFrame)*): Unit = {
+    lists.write.partitionBy("cid").mode(mode).parquet(s"$path/lists")
+    sides.foreach { case (part, df) =>
+      df.write.mode("overwrite").parquet(s"$path/$part") }
+  }
+
+  /** One part (lists, centroids, codebooks) of a stored index. */
+  private def storedPart(spark: SparkSession, path: String, part: String) =
+    spark.read.parquet(s"$path/$part")
 
   /** Build the IVFADC index (Jégou TPAMI 2011 §V — VERDICT r17 gap #1):
     * coarse quantizer via [[centroidInit]], one corpus pass assigning
@@ -1391,11 +1411,12 @@ object Similarity {
 
   /** Residual frame (neighbor_id, cid, __r) under a FIXED coarse
     * quantizer — the shared assignment stage of [[buildIvfPqIndex]],
-    * both PQ append paths, and [[compactIvfPqIndex]]'s re-encode.
-    * Checkpointed once: every caller reads it at least twice (codebook
-    * sweeps/encode, or encode/cid join-back). Zero-norm vectors are
-    * excluded by [[assignNearest]]'s contract (no cosine direction;
-    * ANSI 0/0 is an error, not a NaN).
+    * both PQ append paths, [[compactIvfPqIndex]]'s re-encode and
+    * [[pqBatchError]]. Checkpointed once: every caller but the appends
+    * reads it at least twice (codebook sweeps and encode, or the error
+    * sum's encode and energy sides). Zero-norm vectors are excluded by
+    * [[assignNearest]]'s contract (no cosine direction; ANSI 0/0 is an
+    * error, not a NaN).
     */
   private def pqResiduals(emb: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String): DataFrame =
@@ -1409,17 +1430,15 @@ object Similarity {
 
   /** Encode a [[pqResiduals]] frame into inverted-list entries
     * (cid, neighbor_id, codes) under FIXED codebooks — the list-build
-    * tail shared by [[buildIvfPqIndex]] and the append paths.
+    * tail shared by [[buildIvfPqIndex]], the append paths and
+    * [[compactIvfPqIndex]]: one select over the residual rows, which
+    * already carry their cid, so each row yields exactly one entry.
     */
   private def encodePqLists(resid: DataFrame,
-      codebooks: DataFrame): DataFrame = {
-    val (numSubspaces, subDim) = pqShape(codebooks)
-    pqEncode(resid, codebooks, numSubspaces * subDim,
-        idCol = "neighbor_id", vecCol = "__r")
-      .join(resid.select(col("neighbor_id"), col("cid")),
-        Seq("neighbor_id"))
-      .select(col("cid"), col("neighbor_id"), col("codes"))
-  }
+      codebooks: DataFrame): DataFrame =
+    resid.select(col("cid"), col("neighbor_id"),
+      graft.functions.PqFunctions.pqCodes(col("__r"),
+        localCodebookArray(codebooks)).as("codes"))
 
   /** Probe an [[IvfPqIndex]] — ADC over probed lists ONLY (the §V
     * composition [[pqAdcTopK]]'s scaladoc promised): each query ranks
@@ -1470,21 +1489,14 @@ object Similarity {
     */
   private[operators] def probeIvfPqScores(index: IvfPqIndex,
       queries: DataFrame, nprobe: Int, idCol: String,
-      vecCol: String): DataFrame = {
-    val cb = localCodebookArray(index.codebooks)
-    val q = adcQueries(queries, cb, idCol, vecCol, "probeIvfPq")
-    val probe = coarseProbe(q, index.centroids, cb, nprobe)
-    // static partition pruning, in the lists' own cid type (the
-    // probeIvfQuantized discipline: casting the literal side keeps a
-    // hive-narrowed cid column prunable)
-    val cidType = index.lists.schema("cid").dataType
-    val probed = probe.cids.indices.filter(probe.probers(_).nonEmpty)
-      .map(c => lit(probe.cids(c)).cast(cidType))
-    val lists = index.lists.filter(col("cid").isin(probed: _*))
-      .select(col("neighbor_id"), col("codes"), col("cid"))
-    adcScan(lists, col("codes"), Some(col("cid")),
-      adcTables(q, cb, Some(probe)), q.idType)
-  }
+      vecCol: String): DataFrame =
+    ivfPqAdc(index, queries, nprobe, idCol, vecCol)._1
+
+  /** [[adc]] over an [[IvfPqIndex]]'s probed lists. */
+  private def ivfPqAdc(index: IvfPqIndex, queries: DataFrame, nprobe: Int,
+      idCol: String, vecCol: String): (DataFrame, AdcQueries) =
+    adc(index.lists, "neighbor_id", "codes", queries, index.codebooks,
+      Some((index.centroids, nprobe)), idCol, vecCol, "probeIvfPq")
 
   // ------------------------------------------------ driver-side ADC tables
   // The ADC lookup tables (Q×M×K, C×M×K) are metadata-sized by the
@@ -1496,8 +1508,8 @@ object Similarity {
   // scores are the IEEE values the join form's per-group sums produced
   // (PqAdcSpec keeps that form as its reference).
 
-  /** An ADC probe's query set on the driver: ids as Catalyst values of
-    * `idType`, vectors widened to double, and their norms ‖q‖.
+  /** A probe's query set on the driver: ids (external values of
+    * `idType`), vectors widened to double, and their norms ‖q‖.
     */
   private final case class AdcQueries(idType: DataType, ids: Array[Any],
       vecs: Array[Array[Double]], norms: Array[Double])
@@ -1506,39 +1518,51 @@ object Similarity {
     * id or vector, or a zero norm, drop (no direction; `> 0` under
     * Spark's double ordering, so a NaN norm stays as it did in the SQL
     * filter). Each id must appear once — a repeated id would be scored
-    * with its per-subspace terms summed twice, a plausible wrong score
-    * — and a kept vector must be M·subDim long.
+    * twice (ADC: its per-subspace terms summed twice; a window probe:
+    * its vectors' candidates merged), a plausible wrong score — and a
+    * kept vector must be `dim` long (else fails as `dimOf`: expected,
+    * got).
     */
-  private def adcQueries(queries: DataFrame, cb: Array[Array[Array[Double]]],
-      idCol: String, vecCol: String, caller: String): AdcQueries = {
+  private def adcQueries(queries: DataFrame, dim: Int, idCol: String,
+      vecCol: String, caller: String, dimOf: String): AdcQueries = {
     val idType = queries.schema(idCol).dataType
     val rows = queries.select(col(idCol), col(vecCol).cast("array<double>"))
       .collect()
-    val seen = scala.collection.mutable.HashSet.empty[Any]
-    rows.foreach(r => if (!r.isNullAt(0) && !seen.add(r.get(0))) {
+    val ids = rows.filterNot(_.isNullAt(0)).map(_.get(0))
+    ids.diff(ids.distinct).headOption.foreach(id =>
       throw new IllegalArgumentException(
-        s"$caller: duplicate query id ${r.get(0)} — each query id must " +
-          "appear once")
-    })
+        s"$caller: duplicate query id $id — each query id must appear once"))
     val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map { r =>
         val v = r.getSeq[Double](1).toArray
         (r.get(0), v, localDot(v, 0, v, 0, v.length))
       }
       .filter { case (_, _, vv) => SQLOrderingUtil.compareDoubles(vv, 0.0) > 0 }
-    val dim = cb.length * cb(0)(0).length
-    kept.foreach { case (_, v, _) =>
-      if (v.length != dim) {
-        throw new IllegalArgumentException(
-          s"pq: expected dim $dim, got ${v.length}")
-      }
-    }
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
-    AdcQueries(idType, kept.map(p => toCatalyst(p._1)), kept.map(_._2),
+    kept.find(_._2.length != dim).foreach(p =>
+      throw new IllegalArgumentException(
+        s"$dimOf: expected dim $dim, got ${p._2.length}"))
+    AdcQueries(idType, kept.map(_._1), kept.map(_._2),
       kept.map(p => math.sqrt(p._3)))
   }
 
-  /** The coarse half of an IVF-PQ probe: centroids sorted by cid (the
+  /** The kept queries as a local frame (query_id, __qv array<double>)
+    * and, given a coarse probe, one row per probed (query, cid).
+    */
+  private def queryFrame(spark: SparkSession, q: AdcQueries,
+      probe: Option[CoarseProbe]): DataFrame = {
+    val base = StructType(Seq(StructField("query_id", q.idType),
+      StructField("__qv", ArrayType(DoubleType, containsNull = false))))
+    val (schema, rows) = probe match {
+      case None =>
+        (base, q.ids.indices.map(i => Row(q.ids(i), q.vecs(i).toSeq)))
+      case Some(p) => (base.add("cid", LongType, nullable = false),
+        for (c <- p.cids.indices; i <- p.probers(c))
+          yield Row(q.ids(i), q.vecs(i).toSeq, p.cids(c)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The coarse half of an IVF probe: centroids sorted by cid (the
     * scan kernel binary-searches a row's list) with ‖c‖², and per
     * centroid the queries probing it with their dot(q, c).
     */
@@ -1546,24 +1570,23 @@ object Similarity {
       cvs: Array[Array[Double]], cn0: Array[Double],
       probers: Array[Array[Int]], qc0: Array[Array[Double]])
 
-  /** Rank each query's `nprobe` nearest centroids as the probe window
-    * did: cosine = dot(q, c) / (sqrt(dot(q, q))·sqrt(dot(c, c))), desc
-    * under Spark's double ordering (NaN first, −0.0 = 0.0), ties to the
+  /** Rank each query's `nprobe` nearest of the collected centroids
+    * ([[localCentroids]], each `dim` long) as the probe window did:
+    * cosine = dot(q, c) / (sqrt(dot(q, q))·sqrt(dot(c, c))), desc under
+    * Spark's double ordering (NaN first, −0.0 = 0.0), ties to the
     * lowest cid; a zero denominator fails as ANSI division does.
     */
-  private def coarseProbe(q: AdcQueries, centroids: DataFrame,
-      cb: Array[Array[Array[Double]]], nprobe: Int): CoarseProbe = {
-    val (cids0, cvs0) = localCentroids(centroids)
+  private def coarseProbe(q: AdcQueries,
+      centroids: (Array[Long], Array[Array[Double]]), dim: Int,
+      nprobe: Int, dimOf: String): CoarseProbe = {
+    val (cids0, cvs0) = centroids
     val order = cids0.indices.sortBy(cids0(_)).toArray
     val cids = order.map(cids0)
     val cvs = order.map(cvs0)
     cids.indices.drop(1).foreach(c => require(cids(c) != cids(c - 1),
       s"ivf: duplicate cid ${cids(c)} in the centroid frame"))
-    val dim = cb.length * cb(0)(0).length
-    cvs.foreach(c => if (c.length != dim) {
-      throw new IllegalArgumentException(
-        s"pq: expected dim $dim, got ${c.length}")
-    })
+    cvs.find(_.length != dim).foreach(c => throw new IllegalArgumentException(
+      s"$dimOf: expected dim $dim, got ${c.length}"))
     val cn0 = cvs.map(c => localDot(c, 0, c, 0, dim))
     val probers = Array.fill(cids.length)(Array.newBuilder[Int])
     val qc0 = Array.fill(cids.length)(Array.newBuilder[Double])
@@ -1619,26 +1642,41 @@ object Similarity {
       val w = cb(i / k)(i % k)
       localDot(w, 0, w, 0, subDim)
     }
-    new graft.functions.PqAdcTables(q.ids, q.norms, m, k, partialDots(q.vecs),
-      cwn, coarse.map(p => new graft.functions.PqAdcCoarse(p.cids, p.cn0,
-        partialDots(p.cvs), p.probers, p.qc0)).orNull)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(q.idType)
+    new graft.functions.PqAdcTables(q.ids.map(toCatalyst), q.norms, m, k,
+      partialDots(q.vecs), cwn, coarse.map(p => new graft.functions
+        .PqAdcCoarse(p.cids, p.cn0, partialDots(p.cvs), p.probers, p.qc0))
+        .orNull)
   }
 
-  /** One pass over the coded rows (neighbor_id, codes[, cid]) through the
-    * scan kernel: (query_id, neighbor_id, sim). The tables travel as one
-    * broadcast, fetched once per executor. The self-match filter stays a
-    * Spark predicate on the emitted rows, so the id comparison keeps
-    * Spark's coercion between the rows' and the queries' id types.
+  /** The ADC probe of both PQ rungs: (query_id, neighbor_id, sim)
+    * candidate scores, and the collected queries the float re-rank
+    * reuses. The queries are collected once and the lookup tables built
+    * on the driver; given a coarse quantizer and `nprobe`, the
+    * [[coarseProbe]] narrows the coded rows to [[probedLists]]. One pass
+    * over the rows (`rowId`, `codesCol`[, cid]) through the scan kernel
+    * follows, its tables one broadcast fetched once per executor. The
+    * self-match filter stays a Spark predicate on the emitted rows, so
+    * the id comparison keeps Spark's coercion between the rows' and the
+    * queries' id types.
     */
-  private def adcScan(rows: DataFrame, codes: Column, cid: Option[Column],
-      tables: graft.functions.PqAdcTables, idType: DataType): DataFrame = {
-    val bc = rows.sparkSession.sparkContext.broadcast(tables)
-    rows
-      .select(col("neighbor_id"), explode(graft.functions.PqFunctions
-        .pqAdcScan(codes, cid.map(_.cast("long")), bc, idType)).as("__s"))
+  private def adc(rows: DataFrame, rowId: String, codesCol: String,
+      queries: DataFrame, codebooks: DataFrame, coarse: Option[(DataFrame, Int)],
+      idCol: String, vecCol: String, caller: String): (DataFrame, AdcQueries) = {
+    val cb = localCodebookArray(codebooks)
+    val dim = cb.length * cb(0)(0).length
+    val q = adcQueries(queries, dim, idCol, vecCol, caller, "pq")
+    val probe = coarse.map { case (cents, nprobe) =>
+      coarseProbe(q, localCentroids(cents), dim, nprobe, "pq")
+    }
+    val bc = rows.sparkSession.sparkContext.broadcast(adcTables(q, cb, probe))
+    (probe.fold(rows)(probedLists(rows, _))
+      .select(col(rowId).as("neighbor_id"), explode(graft.functions
+        .PqFunctions.pqAdcScan(col(codesCol),
+          probe.map(_ => col("cid").cast("long")), bc, q.idType)).as("__s"))
       .select(col("__s.query_id").as("query_id"), col("neighbor_id"),
         col("__s.sim").as("sim"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .filter(col("neighbor_id") =!= col("query_id")), q)
   }
 
   /** One-shot build→probe IVFADC — the fixture-scale teaching path and
@@ -1682,34 +1720,21 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cand = probeIvfPq(index, queries, shortlist, nprobe, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries
-      .filter(dot(col(vecCol), col(vecCol)) > 0)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qv")))
-    val scored = emb
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"))
-      .join(broadcast(cand), Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("sim", cosine(col("__qv"), col("__v")))
-    topKEmit(scored, k)
+    val (scores, q) = ivfPqAdc(index, queries, nprobe, idCol, vecCol)
+    floatRerank(emb, topKEmit(scores, shortlist), q, k, idCol, vecCol)
   }
 
   /** Persist an [[IvfPqIndex]]: lists hive-partitioned by `cid` (probe
     * isin → partition pruning), centroids + codebooks as small parquet.
     */
-  def writeIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
-    graft.sources.Layout.writePartitioned(index.lists, s"$path/lists",
-      Seq("cid"))
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    index.codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-  }
+  def writeIvfPqIndex(index: IvfPqIndex, path: String): Unit =
+    storeIndex(path, index.lists, "overwrite",
+      "centroids" -> index.centroids, "codebooks" -> index.codebooks)
 
   /** Reopen a stored [[IvfPqIndex]] for [[probeIvfPq]]. */
   def readIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
-    IvfPqIndex(spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebooks"),
-      spark.read.parquet(s"$path/lists"))
+    IvfPqIndex(storedPart(spark, path, "centroids"),
+      storedPart(spark, path, "codebooks"), storedPart(spark, path, "lists"))
 
   /** Incrementally extend a built IVFADC index with a batch of newly
     * arrived vectors — [[appendToIvfIndex]]'s discipline at the PQ
@@ -1740,10 +1765,8 @@ object Similarity {
       newEmb: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): IvfPqIndex =
-    IvfPqIndex(index.centroids, index.codebooks,
-      index.lists.unionByName(
-        encodePqLists(pqResiduals(newEmb, index.centroids, idCol, vecCol),
-          index.codebooks)))
+    index.copy(lists = index.lists.unionByName(encodePqLists(
+      pqResiduals(newEmb, index.centroids, idCol, vecCol), index.codebooks)))
 
   /** [[appendToIvfPqIndex]] for a [[writeIvfPqIndex]]-stored index:
     * encode the batch against the STORED quantizers and hive-append
@@ -1759,54 +1782,30 @@ object Similarity {
       path: String,
       newEmb: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val cb = spark.read.parquet(s"$path/codebooks")
-    encodePqLists(pqResiduals(newEmb, cents, idCol, vecCol), cb)
-      .write.partitionBy("cid").mode("append").parquet(s"$path/lists")
-  }
+      vecCol: String = "embedding"): Unit =
+    storeIndex(path, encodePqLists(pqResiduals(newEmb,
+      storedPart(spark, path, "centroids"), idCol, vecCol),
+      storedPart(spark, path, "codebooks")), "append")
 
   /** The corpus AS THE INDEX STORES IT — every entry reconstructed to
     * x̂ = c + Σ_m codeword(m, codes_m), the [[compactIvfIndex]]
-    * dequantize move at the PQ rung. One exploded pass over the lists
-    * against the broadcast codebooks; reassembly is deterministic
-    * (subspaces sort by m). Feeds [[compactIvfPqIndex]]'s re-cluster
-    * and [[maintainIvfPqIndex]]'s ground truth, so maintenance never
+    * dequantize move at the PQ rung. One pass over the lists: the
+    * codewords are looked up per row in the literal codebooks
+    * ([[codewords]], the flat reconstruction) and added to the broadcast
+    * coarse centroid. Feeds [[compactIvfPqIndex]]'s re-cluster and
+    * [[maintainIvfPqIndex]]'s ground truth, so maintenance never
     * re-reads or re-embeds the float corpus.
     *
-    * Duplicate-id guard (the [[compactIvfIndex]] ADVICE r15 contract):
-    * a unique entry contributes exactly `numSubspaces` exploded rows,
-    * so a double-appended id shows 2M rows in its group — the per-id
-    * reassembly would silently interleave two entries' codewords into
-    * one garbage vector; instead the count piggybacks on the agg and
-    * fails the job naming the id.
+    * Duplicate-id guard (the [[compactIvfIndex]] ADVICE r15 contract,
+    * [[uniqueEntries]]): a double-appended id fails the job naming the
+    * id instead of reconstructing twice.
     */
-  def reconstructPq(index: IvfPqIndex): DataFrame = {
-    val (numSubspaces, _) = pqShape(index.codebooks)
-    val cb = broadcast(index.codebooks
-      .select(col("m"), col("cid").as("code"),
-        col("__cv").cast("array<double>").as("__cw")))
-    index.lists
-      .select(col("cid"), col("neighbor_id"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-      .join(cb, Seq("m", "code"))
-      .groupBy(col("neighbor_id"))
-      .agg(min(col("cid")).as("cid"), count(lit(1)).as("__n"),
-        transform(array_sort(collect_list(struct(col("m"), col("__cw")))),
-          s => s.getField("__cw")).as("__parts"))
-      .select(col("neighbor_id"),
-        when(col("__n") =!= numSubspaces,
-          raise_error(concat(
-            lit("reconstructPq: duplicate neighbor_id "),
-            col("neighbor_id").cast("string"),
-            lit(" in lists — was a batch appended twice?"))))
-          .otherwise(col("cid")).as("cid"),
-        flatten(col("__parts")).as("__r"))
+  def reconstructPq(index: IvfPqIndex): DataFrame =
+    uniqueEntries(index.lists, "reconstructPq")
       .join(broadcast(index.centroids), Seq("cid"))
       .select(col("neighbor_id").as("vec_id"),
-        zip_with(col("__r"), col("__cv").cast("array<double>"),
-          (r, c) => r + c).as("embedding"))
-  }
+        zip_with(codewords(col("codes"), index.codebooks),
+          col("__cv").cast("array<double>"), (r, c) => r + c).as("embedding"))
 
   /** Compact a doubly-drifted IVFADC index: re-Lloyd the coarse
     * centroids over the RECONSTRUCTED corpus (current centroids as the
@@ -1850,9 +1849,7 @@ object Similarity {
       s"codebook re-train needs >= 1 sweep, got $iterations")
     require(kmeansIterations >= 1,
       s"compaction without Lloyd sweeps is a no-op, got $kmeansIterations")
-    val (numSubspaces, subDim) = pqShape(index.codebooks)
-    val codebookSize = index.codebooks.agg(max(col("cid")).cast("int"))
-      .collect()(0).getInt(0) + 1
+    val cb0 = localCodebookArray(index.codebooks)
     // staged once: the Lloyd sweeps, the residual pass, and the encode
     // all re-read the reconstruction. Zero-norm reconstructions (codes
     // summing exactly to the coarse centroid's negation) are filtered
@@ -1864,8 +1861,8 @@ object Similarity {
       .transform(Persist.round)
     val cents = kmeansCentroids(recon, index.centroids, kmeansIterations)
     val resid = pqResiduals(recon, cents, "vec_id", "embedding")
-    val cb = pqTrainCodebooks(resid, numSubspaces * subDim, numSubspaces,
-      codebookSize, iterations, idCol = "neighbor_id", vecCol = "__r")
+    val cb = pqTrainCodebooks(resid, cb0.length * cb0(0)(0).length,
+      cb0.length, cb0(0).length, iterations, "neighbor_id", "__r")
     IvfPqIndex(cents, cb, encodePqLists(resid, cb))
   }
 
@@ -1878,33 +1875,17 @@ object Similarity {
     * codebook signature: the vector becomes unreachable garbage while
     * every stored byte still "looks" valid). Exactly measurable at
     * append time — the one moment the floats are in hand — and
-    * batch-sized: one assignment + encode pass, one scalar collected.
+    * batch-sized: [[pqReconstructionError]] over the batch's
+    * [[pqResiduals]], one scalar collected.
     */
   def pqBatchError(
       batch: DataFrame,
       centroids: DataFrame,
       codebooks: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): Double = {
-    val (numSubspaces, subDim) = pqShape(codebooks)
-    val resid = pqResiduals(batch, centroids, idCol, vecCol)
-    val cb = broadcast(codebooks.select(col("m"), col("cid").as("code"),
-      col("__cv").cast("array<double>").as("__cw")))
-    val rhat = pqEncode(resid, codebooks, numSubspaces * subDim,
-        idCol = "neighbor_id", vecCol = "__r")
-      .select(col("neighbor_id"), posexplode(col("codes")).as(Seq("m", "code")))
-      .join(cb, Seq("m", "code"))
-      .groupBy(col("neighbor_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("m"), col("__cw")))),
-        s => s.getField("__cw"))).as("__rhat"))
-    val row = resid.join(rhat, Seq("neighbor_id"))
-      .agg(sum(l2sq(col("__r"), col("__rhat"))).as("err"),
-        sum(dot(col("__r"), col("__r"))).as("energy"))
-      .collect()(0)
-    if (row.isNullAt(1) || row.getDouble(1) == 0.0) 0.0
-    else row.getDouble(0) / row.getDouble(1)
-  }
+      vecCol: String = "embedding"): Double =
+    pqReconstructionError(pqResiduals(batch, centroids, idCol, vecCol),
+      codebooks, idCol = "neighbor_id", vecCol = "__r")
 
   /** One [[maintainIvfPqIndex]] pass: what happened, and the evidence
     * it acted on. `rebuildNeeded` means the batch was REFUSED — its
@@ -1945,14 +1926,17 @@ object Similarity {
     *     of gate 1), recovered by [[compactIvfPqIndex]] + rewrite when
     *     it decays below `recallFloor`.
     *
-    * Cost per pass: the batch-sized error measurement (+ encode/append
-    * when accepted) + one |probes| × |reconstructed lists| scan
-    * (probes are held-out and metadata-sized by contract) and, when
-    * compaction triggers, the re-cluster sweeps plus one full lists
-    * rewrite (entries change lists AND codes — a rewrite is the
-    * operation). The re-encoded lists are staged before the overwrite
-    * — the compacted plan reads the very files the write replaces.
-    * Only scalars are collected.
+    * Cost per pass: one read of the stored quantizers (they serve the
+    * error gate, the append and the probes), the batch-sized error
+    * measurement (+ encode/append when accepted) + one |probes| ×
+    * |reconstructed lists| scan (probes are held-out and metadata-sized
+    * by contract) and, when compaction triggers, the re-cluster sweeps
+    * plus one full lists rewrite (entries change lists AND codes — a
+    * rewrite is the operation). Past the gate this is the int8 rung's
+    * loop ([[maintainLoop]]): the re-encoded lists are staged before the
+    * overwrite — the compacted plan reads the very files the write
+    * replaces. Only scalars are collected; an empty or all-zero-norm
+    * probe set fails naming this method.
     */
   def maintainIvfPqIndex(
       spark: SparkSession,
@@ -1971,24 +1955,10 @@ object Similarity {
       s"recallFloor must be in (0, 1], got $recallFloor")
     require(errorCeiling > 0.0 && errorCeiling < 1.0,
       s"errorCeiling must be in (0, 1), got $errorCeiling")
-    def meanRecall(index: IvfPqIndex): Double = {
-      val recon = reconstructPq(index)
-        .select(col("vec_id").as(idCol), col("embedding").as(vecCol))
-      val exact = bruteForceTopK(recon, probes, k, idCol, vecCol)
-      val approx = probeIvfPq(index, probes, k, nprobe, idCol, vecCol)
-      val row = recallAtK(approx, exact).agg(avg(col("recall"))).collect()(0)
-      // Fail loud on a degenerate probe set: an empty (or all-zero-norm)
-      // probes frame averages to NULL, which would otherwise surface as
-      // an opaque NPE instead of naming the contract.
-      require(!row.isNullAt(0),
-        "maintainIvfPqIndex: probes produced no recall rows — the " +
-          "probes frame must contain at least one non-zero-norm vector")
-      row.getDouble(0)
-    }
+    def recall(ix: IvfPqIndex): Double = meanRecall(reconstructPq(ix),
+      probeIvfPq(ix, probes, k, nprobe, idCol, vecCol), probes, k, idCol,
+      vecCol, "maintainIvfPqIndex")
     val toAppend = batch.count()
-    // one read of the quantizer halves per pass (VERDICT r19 nit #3):
-    // centroids/codebooks are immutable below — only the lists change
-    // on append, so only they re-read
     val stored = readIvfPqIndex(spark, path)
     val batchError = if (toAppend > 0L) {
       pqBatchError(batch, stored.centroids, stored.codebooks, idCol, vecCol)
@@ -1996,30 +1966,20 @@ object Similarity {
     if (batchError > errorCeiling) {
       // gate 1 trips: nothing written — the recall of the UNTOUCHED
       // index is still reported so the operator sees the full picture
-      val r = meanRecall(stored)
+      val r = recall(stored)
       PqMaintenanceReport(0L, batchError, rebuildNeeded = true,
         recallBefore = r, compacted = false, recallAfter = r)
     } else {
-      if (toAppend > 0L) {
-        appendToStoredIvfPqIndex(spark, path, batch, idCol, vecCol)
-      }
-      val grown = IvfPqIndex(stored.centroids, stored.codebooks,
-        spark.read.parquet(s"$path/lists"))
-      val before = meanRecall(grown)
-      if (before >= recallFloor) {
-        PqMaintenanceReport(toAppend, batchError, rebuildNeeded = false,
-          before, compacted = false, before)
-      } else {
-        val compacted = compactIvfPqIndex(grown, iterations, kmeansIterations)
-        // stage before overwrite: the re-encoded plan reads the files
-        // the write replaces (the maintainIvfIndex discipline)
-        val staged = IvfPqIndex(compacted.centroids, compacted.codebooks,
-          compacted.lists.transform(Persist.round))
-        writeIvfPqIndex(staged, path)
-        val after = meanRecall(readIvfPqIndex(spark, path))
-        PqMaintenanceReport(toAppend, batchError, rebuildNeeded = false,
-          before, compacted = true, after)
-      }
+      if (toAppend > 0L) storeIndex(path, encodePqLists(pqResiduals(batch,
+        stored.centroids, idCol, vecCol), stored.codebooks), "append")
+      val (before, compacted, after) = maintainLoop(
+        stored.copy(lists = storedPart(spark, path, "lists")), recallFloor,
+        recall)(compactIvfPqIndex(_, iterations, kmeansIterations),
+        ix => writeIvfPqIndex(
+          ix.copy(lists = ix.lists.transform(Persist.round)), path),
+        readIvfPqIndex(spark, path))
+      PqMaintenanceReport(toAppend, batchError, rebuildNeeded = false,
+        before, compacted, after)
     }
   }
 
@@ -2174,16 +2134,16 @@ object Similarity {
 
   /** Relative flat-PQ reconstruction error: Σ‖x − x̂‖² / Σ‖x‖² over the
     * frame, x̂ = the codeword reconstruction of x under `codebooks` —
-    * [[pqBatchError]] without the coarse-residual stage; the
-    * quantization-quality number the OPQ gate compares across
-    * rotations. One encode pass + one scalar collected.
+    * the quantization-quality number the OPQ gate compares across
+    * rotations, and, over a batch's coarse residuals, [[pqBatchError]].
+    * One encode pass + one scalar collected.
     */
   def pqReconstructionError(emb: DataFrame, codebooks: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): Double = {
-    val (numSubspaces, subDim) = pqShape(codebooks)
-    val recon = pqReconstruct(
-      pqEncode(emb, codebooks, numSubspaces * subDim, idCol, vecCol),
-      codebooks, idCol)
+    val cb = localCodebookArray(codebooks)
+    val recon = pqEncode(emb, codebooks, cb.length * cb(0)(0).length, idCol,
+        vecCol)
+      .select(col(idCol), codewords(col("codes"), codebooks).as("__rhat"))
     val row = emb
       .select(col(idCol), col(vecCol).cast("array<double>").as("__x"))
       .join(recon, Seq(idCol))
@@ -2192,23 +2152,6 @@ object Similarity {
       .collect()(0)
     if (row.isNullAt(1) || row.getDouble(1) == 0.0) 0.0
     else row.getDouble(0) / row.getDouble(1)
-  }
-
-  /** Codeword reconstruction of a codes frame: (idCol, __rhat), the
-    * [[pqBatchError]] assembly shared with [[pqReconstructionError]]
-    * and the OPQ Procrustes step.
-    */
-  private def pqReconstruct(codes: DataFrame, codebooks: DataFrame,
-      idCol: String): DataFrame = {
-    // per-row codeword lookup against the literal codebooks (round 21):
-    // the explode → broadcast join → collect_list re-assembly produced
-    // the same flatten-in-m-order array with one shuffle; identical
-    // codeword doubles (same float→double widening), zero shuffles.
-    val cbLit = codebookLit(codebooks)
-    codes.select(col(idCol),
-      flatten(transform(col("codes"),
-        (code, m) => element_at(element_at(cbLit, m + 1), code + 1)))
-        .as("__rhat"))
   }
 
   /** Optimized-Product-Quantization rotation (Ge et al., CVPR 2013,
@@ -2322,8 +2265,8 @@ object Similarity {
         .transform(Persist.round) // train + encode both read it
       val cb = pqTrainCodebooks(rotated, dim, numSubspaces, codebookSize,
         pqIterations, idCol, vecCol)
-      val recon = pqReconstruct(
-        pqEncode(rotated, cb, dim, idCol, vecCol), cb, idCol)
+      val recon = pqEncode(rotated, cb, dim, idCol, vecCol)
+        .select(col(idCol), codewords(col("codes"), cb).as("__rhat"))
       // M[i][j] = Σ_rows x̂_i · x_j  (x = the ORIGINAL vector: R is
       // absolute, re-solved from scratch each alternation) — the same
       // single-explode + dim-sum-columns shape as the covariance pass

@@ -311,6 +311,9 @@ class PqAdcSpec extends SparkSpec {
     // The lookup-table join form ran (13, 15), (7, 21) and (2, 8): a
     // lazy centroid init re-run by each consumer, two-job shape
     // aggregates, and the probe's staging, cid collect and table joins.
+    // The one-kernel form ran (10, 12) and (1, 7) for the first two: the
+    // list encode joined its codes back to the residuals for their cid
+    // (a broadcast), and the re-rank broadcast a re-read of the queries.
     val emb = parquetCorpus
     val queries = emb.filter($"vec_id" < 10)
     def build() = Similarity.buildIvfPqIndex(emb, dim = 64,
@@ -328,8 +331,8 @@ class PqAdcSpec extends SparkSpec {
         queries, 5, shortlist = 50, nprobe = 4)),
       "pqAdcTopK" -> jobs(Similarity.pqAdcTopK(codes, queries, cb, 5)))
     val pinned = Map(
-      "buildIvfPqIndex" -> ((10, 12)),
-      "ivfPqRerankTopK" -> ((1, 7)),
+      "buildIvfPqIndex" -> ((10, 11)),
+      "ivfPqRerankTopK" -> ((1, 6)),
       "pqAdcTopK" -> ((1, 3)))
     assert(got == pinned, s"jobs per call moved: $got")
   }
