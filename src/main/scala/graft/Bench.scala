@@ -7,8 +7,14 @@ package graft
   *    projected/window expression. `.count()` let Catalyst's ColumnPruning
   *    drop unreferenced projections, so compute-heavy queries measured
   *    scan+count only.
-  *  - one untimed warmup pass first (JIT + codegen + parquet footer cache),
-  *    then the timed pass; per-query numbers are comparable.
+  *  - one untimed warmup pass first (JIT + parquet footer cache), then
+  *    the timed pass; per-query numbers are comparable. The warm-up primes
+  *    codegen only while the run's generated classes fit the cache that
+  *    [[Sessions]] sizes: at sf0.01 the timed pass over q41, q208 and q230
+  *    recompiled no class (118 at Spark's default of 100 entries), but
+  *    the 53 queries matching `q2,q41` compile 1,355 classes in the
+  *    warm-up and recompile 1,161 of them in the timed pass (1,969 at
+  *    100). A whole-suite timed pass includes Janino compile time.
   *  - failures are recorded per query (`"errors"` object) and the process
   *    exits non-zero — a broken query can no longer improve the bench.
   */

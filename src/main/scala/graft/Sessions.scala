@@ -25,8 +25,32 @@ import org.apache.spark.sql.SparkSession
   *    are wildly wrong after multi-stage derivations, and a mis-sized
   *    hash build turns into GC churn that degrades the whole suite
   *    (full-suite 347 s → 515 s). Do not re-flip without per-join hints.
+  *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]
+  *    (Spark's default is 100). The cache holds Janino-compiled
+  *    whole-stage and projection classes keyed by their Java source, and
+  *    it is LRU: a repeated working set larger than the cache misses on
+  *    every access, so every pass recompiles all of its classes, on the
+  *    driver and in tasks. Compiles per warm pass, measured with
+  *    `CodegenMetrics.METRIC_COMPILATION_TIME`:
+  *    - perfbench retrieval (dedup, ann, search; about 215 classes):
+  *      200-212 at 100 entries, about 150 at 200, 0-8 at 300 and at
+  *      1,000 (adaptive execution renumbers a few whole-stage classes
+  *      now and then);
+  *    - perfbench medallion (76 classes): none at 100 or 1,000;
+  *    - a `graft.Bench` timed pass over q41, q208 and q230 at sf0.01:
+  *      118 at 100, none at 1,000. A larger Bench subset still outgrows
+  *      1,000: the 53 queries matching `q2,q41` compile 1,355 classes in
+  *      the warm-up and recompile 1,161 in the timed pass (1,969 at 100).
+  *    1,000 holds both benchmark passes with room to spare.
+  *    The setting is JVM-global: Spark sizes the cache once, when the
+  *    `CodeGenerator` object first initialises, from the conf of the
+  *    session active then. A JVM whose first codegen runs in a session
+  *    not built here keeps 100 whatever later sessions set.
   */
 object Sessions {
+  /** Entries in Spark's generated-class cache; see the object scaladoc. */
+  private[graft] val CodegenCacheEntries = 1000L
+
   def local(cpus: String, appName: String): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -38,5 +62,6 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
 }
